@@ -958,7 +958,7 @@ object SnapshotQueries {
   }
 
   /** `q_stream_source`: the snapshot table as a NATIVE streaming
-    * SOURCE ([[graft.sources.SnapshotSourceProvider]]) as an oracle-
+    * SOURCE ([[graft.sources.SnapshotStreamProvider]]) as an oracle-
     * checked query. The cached fixture is the two-batch snapshot
     * silver; the query opens `readStream.format("graft-snapshot")`
     * over it and drains to a parquet sink with Trigger.AvailableNow —
@@ -1048,7 +1048,7 @@ object SnapshotQueries {
   }
 
   /** `q_stream_change_feed`: the row-level change feed as a NATIVE
-    * STREAMING source ([[graft.sources.SnapshotCdcProvider]] — closes
+    * STREAMING source ([[graft.sources.SnapshotStreamProvider]] — closes
     * the append source's documented contract edge: deletes now stream
     * as retractions instead of being "the batch CDC path's job"). Same
     * fixture traffic as q_change_feed (mergeMor upsert + positional

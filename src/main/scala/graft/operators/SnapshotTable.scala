@@ -2432,7 +2432,7 @@ object SnapshotTable {
     * join or leave via a ref), metadata-only commits trivially do
     * (empty delta); a COPY-ON-WRITE rewrite or rollback does not.
     * Shared by the batch feed ([[changeRowsBetween]]) and the
-    * streaming feed ([[graft.sources.SnapshotCdcProvider]]) so the two
+    * streaming feed ([[graft.sources.SnapshotStreamProvider]]) so the two
     * surfaces accept exactly the same history. */
   private[graft] def rowMonotoneOp(op: String): Boolean =
     op.startsWith("append") || op.startsWith("stream-") ||
@@ -2610,7 +2610,7 @@ object SnapshotTable {
   }
 
   /** Live files ADDED between two versions — the streaming source's
-    * plan input ([[graft.sources.SnapshotSourceProvider]]): pure
+    * plan input ([[graft.sources.SnapshotStreamProvider]]): pure
     * root/chunk diff, no listing, no data read. A vacuumed
     * `fromVersion` degrades to the complete current content (complete,
     * no longer minimal), matching [[readFilesAdded]]. */
@@ -2708,7 +2708,7 @@ object SnapshotTable {
 
   /** The PRE-IMAGE row positions of the delete refs NEW at `version` —
     * the plan-time core of the STREAMING change feed
-    * ([[graft.sources.SnapshotCdcProvider]]): for every
+    * ([[graft.sources.SnapshotStreamProvider]]): for every
     * equality/positional ref present at `version` but not at its
     * parent, the (table-relative path, in-file row index) of each row
     * the ref erased, AS VISIBLE AT THE PARENT (rows already invisible
@@ -3132,29 +3132,21 @@ object SnapshotTable {
     Option(r.getAs[Integer]("service_year")).map(_.intValue),
     Option(r.getAs[Integer]("service_month")).map(_.intValue))).toSeq
 
-  /** input_file_name() URIs → table-relative paths. */
-  private def relPathsOf(spark: SparkSession, tableDir: String,
-      uris: Seq[String]): Seq[String] = {
-    val rootPath = fsOf(spark, new Path(tableDir))
-      .makeQualified(new Path(tableDir)).toUri.getPath.stripSuffix("/")
-    uris.map(u => new java.net.URI(u).getPath.stripPrefix(rootPath)
-      .stripPrefix("/"))
-  }
-
   /** The candidate files that ACTUALLY hold one of `keySet`'s keys —
     * the verify step between the metadata zone probe (false positives
     * possible) and any rewrite: reads ONLY the candidate files, emits
     * the file-level truth, so the copy-on-write unit can be the FILE
-    * (round-13's one perf-weak: partition-granularity rewrites). */
+    * (round-13's one perf-weak: partition-granularity rewrites). The
+    * file comes from the read's own table-relative `__rel` column, not
+    * input_file_name(), which Spark rejects once a live merge-on-read
+    * delete puts a join between the scan and the projection. */
   private def filesHoldingKeys(spark: SparkSession, tableDir: String,
       root: Root, cands: Seq[String], keySet: DataFrame, key: String)
       : Seq[String] = {
     if (cands.isEmpty) return Nil
-    val hit = readFileGroups(spark, tableDir, root, cands)
-      .withColumn("__f", input_file_name())
+    readFileGroups(spark, tableDir, root, cands, keepPos = true)
       .join(keySet, Seq(key), "leftsemi")
-      .select(col("__f")).distinct().collect().map(_.getString(0)).toSeq
-    relPathsOf(spark, tableDir, hit)
+      .select(col("__rel")).distinct().collect().map(_.getString(0)).toSeq
   }
 
   def merge(spark: SparkSession, tableDir: String, updates: DataFrame,
@@ -3527,24 +3519,34 @@ object SnapshotTable {
     // would silently degrade their downstream reuse.
     val mine = feed.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE
-    if (mine) {
-      feed.persist()
-      // EAGERLY fill the cache before the consumers fan out: the
-      // delete-key sidecar alone references the feed through THREE
-      // independent shuffle subtrees (delete arm, insert window,
-      // max-delete-version aggregate), and AQE materializes
-      // independent query stages CONCURRENTLY — with a lazy persist
-      // all three jobs race to compute the un-cached feed and each
-      // re-runs the full CDC scan including delete pre-image
-      // reconstruction (round-18 JobProfile: three concurrent 5.9 s
-      // jobs inside one applyChangeFeed at sf0.1). count() through
-      // the InMemoryRelation materializes every column of every
-      // partition exactly once; the fan-out then reads blocks.
-      feed.count()
-    }
-    try applyChangeFeedCached(spark, tableDir, feed, key, statsColumns,
-      debtRatio)
-    finally if (mine) feed.unpersist(false)
+    try {
+      // EAGERLY fill the cache before the consumers fan out (the insert
+      // arm's latest-version window and delete-version join, the
+      // delete-key distinct, the staged write): AQE materializes
+      // independent query stages CONCURRENTLY, and with a lazy persist
+      // each would race to compute the un-cached feed and re-run the
+      // full CDC scan including delete pre-image reconstruction
+      // (round-18 JobProfile: three concurrent 5.9 s jobs inside one
+      // applyChangeFeed at sf0.1). The marker check below runs through
+      // the InMemoryRelation, so its one job materializes every column
+      // of every partition exactly once.
+      if (mine) feed.persist()
+      // a marker other than insert/delete (a Delta-style
+      // update_preimage, a null) has no meaning here: applied, its key
+      // would be deleted and never re-inserted. Reject the feed before
+      // any staged write, naming the first such value.
+      val ct = col("_change_type")
+      val bad = feed.agg(min(when(ct.isNull, lit("null"))
+          .when(!ct.isin("insert", "delete"),
+            concat(lit("'"), ct, lit("'")))))
+        .head().getString(0)
+      if (bad != null)
+        throw new IllegalArgumentException(
+          s"applyChangeFeed: _change_type $bad is neither 'insert' nor " +
+            "'delete'")
+      applyChangeFeedCached(spark, tableDir, feed, key, statsColumns,
+        debtRatio)
+    } finally if (mine) feed.unpersist(false)
   }
 
   private def applyChangeFeedCached(spark: SparkSession, tableDir: String,

@@ -171,6 +171,66 @@ class SnapshotCdcSpec extends SparkSpec {
       "the later commit's image must win")
   }
 
+  test("applyChangeFeed rejects a _change_type other than insert/delete before any write, leaking no cache") {
+    val mir = s"$base/badtype"
+    wipe(mir)
+    SnapshotTable.append(spark, mir, rows(Seq("A", "B"), "b1", 1.0))
+    val v = SnapshotTable.latestVersion(spark, mir)
+    def tree = {
+      def walk(f: File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f.getPath)
+      walk(new File(mir)).toSet
+    }
+    val filesBefore = tree
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val good = rows(Seq("B"), "b2", 2.0)
+      .withColumn("_change_type", lit("insert"))
+    Seq(lit("update_preimage") -> "'update_preimage'",
+        lit(null).cast("string") -> "null").foreach { case (ct, shown) =>
+      val feed = good.unionByName(rows(Seq("A"), "b2", 2.0)
+        .withColumn("_change_type", ct))
+      val e = intercept[IllegalArgumentException] {
+        SnapshotTable.applyChangeFeed(spark, mir, feed, key = "claim_id")
+      }
+      assert(e.getMessage.contains(s"_change_type $shown"), e.getMessage)
+      assert(SnapshotTable.latestVersion(spark, mir) == v,
+        "a rejected feed must not commit")
+      assert(tree == filesBefore, "a rejected feed must stage nothing")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+        "the feed's own cache must be released on rejection")
+    }
+    assert(content(mir) == Set(("A", "b1", 1.0), ("B", "b1", 1.0)))
+  }
+
+  test("graft-snapshot drain == graft-snapshot-cdc insert arm over a row-monotone history") {
+    val dir = s"$base/formats"
+    val io = s"$base/formats_io"
+    wipe(dir); wipe(io)
+    SnapshotTable.append(spark, dir,
+      rows(Seq("A", "B", "C", "D"), "b1", 1.0)) // v1
+    SnapshotTable.mergeMor(spark, dir, rows(Seq("B", "E"), "b2", 2.0))
+    SnapshotTable.deleteKeysMor(spark, dir, Seq("A").toDF("claim_id"))
+    SnapshotTable.deleteWhere(spark, dir, col("claim_id") === "E")
+    SnapshotTable.append(spark, dir, rows(Seq("F"), "b3", 3.0))
+    val q = spark.readStream.format("graft-snapshot")
+      .option("path", dir).load()
+      .writeStream.format("parquet")
+      .option("path", s"$io/append").option("checkpointLocation",
+        s"$io/append_ck")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val appended = spark.read.parquet(s"$io/append")
+    val inserts = drain(dir, s"$io/cdc", s"$io/cdc_ck")
+      .filter(col("_change_type") === "insert")
+      .drop("_change_type", "_commit_version")
+      .select(appended.columns.map(col): _*)
+    assert(appended.count() == 4) // C, D, B's restatement, F
+    assert(appended.count() == inserts.count())
+    assert(appended.exceptAll(inserts).isEmpty &&
+      inserts.exceptAll(appended).isEmpty)
+  }
+
   test("maxVersionsPerBatch paces the drain into capped micro-batches") {
     val dir = s"$base/paced"
     val io = s"$base/paced_io"
@@ -212,7 +272,7 @@ class SnapshotCdcSpec extends SparkSpec {
   }
 
   test("a bulk erasure beyond the embed budget streams row-level via the spilled positions cache") {
-    import graft.sources.{CdcInputPartition, SnapshotCdcMicroBatchStream, SnapshotOffset}
+    import graft.sources.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset, SnapshotStreamOptions}
     val dir = s"$base/bulk"
     val io = s"$base/bulk_io"
     wipe(dir); wipe(io)
@@ -228,13 +288,13 @@ class SnapshotCdcSpec extends SparkSpec {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("_commit_version",
           org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val stream = new SnapshotCdcMicroBatchStream(dir, full, full, 0,
-      None, preImageEmbedMax = 3,
-      checkpointLocation = Some(s"$io/plan_ck"))
+    val stream = new SnapshotMicroBatchStream(
+      SnapshotStreamOptions(dir, changeFeed = true, preImageEmbedMax = 3),
+      full, full, checkpointLocation = Some(s"$io/plan_ck"))
     val parts = stream.planInputPartitions(SnapshotOffset(0),
       SnapshotOffset(2))
     val slices = parts
-      .flatMap(_.asInstanceOf[CdcInputPartition].slices)
+      .flatMap(_.asInstanceOf[SnapshotInputPartition].slices)
     val dels = slices.filter(_.changeType == "delete")
     assert(dels.nonEmpty)
     assert(dels.forall(s => s.positions.isEmpty && s.posRefs.nonEmpty),

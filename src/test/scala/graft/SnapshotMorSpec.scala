@@ -451,4 +451,43 @@ class SnapshotMorSpec extends SparkSpec {
     assert(now.filter(col("claim_id").isin("K3-01", "K7-02")).isEmpty,
       "the delete must keep applying through merged/compacted manifests")
   }
+
+  test("copy-on-write merge and deleteKeys compose with live merge-on-read deletes: content equals a model") {
+    val dir = s"$base/cow_after_mor"
+    wipe(dir)
+    threeFileTable(dir)
+    def claims(cs: (String, String, Double, Int, Int)*) = cs.toDF("claim_id", "batch_id",
+      "claim_amount", "service_year", "service_month")
+    var model: Map[String, (String, String, Double, Int, Int)] =
+      Seq(("A", "b1", 1), ("B", "b2", 1), ("C", "b3", 2)).flatMap {
+        case (p, b, m) => (0 until 10).map(i =>
+          f"$p$i%02d" -> ((f"$p$i%02d", b, i * 1.0, 2000, m)))
+      }.toMap
+    def upsert(cs: (String, String, Double, Int, Int)*): Unit = model ++= cs.map(c => c._1 -> c)
+    // merge-on-read: an equality delete (A03's restatement) and a
+    // positional one (B05) go live before any copy-on-write DML
+    val morRows = Seq(("A03", "b9", 999.0, 2000, 1),
+      ("N00", "b9", 5.0, 2000, 2))
+    SnapshotTable.mergeMor(spark, dir, claims(morRows: _*))
+    upsert(morRows: _*)
+    SnapshotTable.deleteWhere(spark, dir, col("claim_id") === "B05")
+    model -= "B05"
+    // copy-on-write merge touching the mergeMor file (A03), the
+    // equality-delete-reached A-file (A05), the positionally-deleted
+    // B-file (B02), plus one new key
+    val cowRows = Seq(("A03", "c1", 333.0, 2000, 1),
+      ("A05", "c1", 55.0, 2000, 1), ("B02", "c1", 22.0, 2000, 1),
+      ("M00", "c1", 1.0, 2000, 2))
+    SnapshotTable.merge(spark, dir, claims(cowRows: _*))
+    upsert(cowRows: _*)
+    SnapshotTable.deleteKeys(spark, dir,
+      Seq("A07", "N00", "C01", "B05").toDF("claim_id"))
+    model --= Seq("A07", "N00", "C01")
+    val got = SnapshotTable.read(spark, dir)
+      .select("claim_id", "batch_id", "claim_amount", "service_year",
+        "service_month")
+      .as[(String, String, Double, Int, Int)].collect()
+    assert(got.length == model.size, "no duplicate or resurrected key")
+    assert(got.toSet == model.values.toSet)
+  }
 }

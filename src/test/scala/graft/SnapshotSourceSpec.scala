@@ -136,14 +136,15 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("bin-packing: a many-small-file batch plans into few input splits, every file covered exactly once") {
-    import graft.sources.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset}
+    import graft.sources.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset, SnapshotStreamOptions}
     val dir = s"$base/binpack"
     wipe(dir)
     val t = s"$dir/t"
     // 24 tiny files (8 appends x 3-way split months)
     (1 to 8).foreach(i => SnapshotTable.append(spark, t,
       rows(3, 1 + (i % 3), s"b$i").repartition(1)))
-    val stream = new SnapshotMicroBatchStream(t,
+    val stream = new SnapshotMicroBatchStream(
+      SnapshotStreamOptions(t, changeFeed = false),
       SnapshotTable.tableSchema(spark, t).get,
       SnapshotTable.tableSchema(spark, t).get)
     val splits = stream.planInputPartitions(SnapshotOffset(0),
@@ -230,14 +231,15 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("vectorized decode: clean splits read ColumnarBatch; a MoR-reached split falls back to rows — same content") {
-    import graft.sources.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset}
+    import graft.sources.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset, SnapshotStreamOptions}
     val dir = s"$base/columnar"
     wipe(dir)
     val t = s"$dir/t"
     SnapshotTable.append(spark, t, rows(6, 1, "b1"),
       statsColumns = Seq("claim_id"))
     val schema = SnapshotTable.tableSchema(spark, t).get
-    val stream = new SnapshotMicroBatchStream(t, schema, schema)
+    val stream = new SnapshotMicroBatchStream(
+      SnapshotStreamOptions(t, changeFeed = false), schema, schema)
     val splits = stream.planInputPartitions(SnapshotOffset(0),
       SnapshotOffset(SnapshotTable.latestVersion(spark, t)))
     val factory = stream.createReaderFactory()
@@ -257,12 +259,13 @@ class SnapshotSourceSpec extends SparkSpec {
     assert(rowsRead == 6L, s"columnar decode must yield all rows, got $rowsRead")
     // a reaching delete forces the affected split onto the row path
     SnapshotTable.deleteKeysMor(spark, t, Seq("K1-2").toDF("claim_id"))
-    val stream2 = new SnapshotMicroBatchStream(t, schema, schema)
+    val stream2 = new SnapshotMicroBatchStream(
+      SnapshotStreamOptions(t, changeFeed = false), schema, schema)
     val splits2 = stream2.planInputPartitions(SnapshotOffset(0),
       SnapshotOffset(SnapshotTable.latestVersion(spark, t)))
     val factory2 = stream2.createReaderFactory()
     val reached = splits2.filter(p =>
-      p.asInstanceOf[SnapshotInputPartition].slices.exists(_.doomed.nonEmpty))
+      p.asInstanceOf[SnapshotInputPartition].slices.exists(_.positions.nonEmpty))
     assert(reached.nonEmpty, "the delete must reach some split")
     assert(reached.forall(p => !factory2.supportColumnarReads(p)),
       "MoR-reached splits must decode row-based")
