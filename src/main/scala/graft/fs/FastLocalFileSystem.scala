@@ -2,7 +2,7 @@ package graft.fs
 
 import java.io.FileNotFoundException
 import java.nio.file.{Files, NoSuchFileException}
-import java.nio.file.attribute.{PosixFileAttributeView, PosixFileAttributes, PosixFilePermission}
+import java.nio.file.attribute.{FileTime, GroupPrincipal, PosixFileAttributeView, PosixFilePermission, UserPrincipal}
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -40,20 +40,8 @@ class FastLocalFileSystem
 
 class FastRawLocalFileSystem extends RawLocalFileSystem {
 
-  private def bits(perms: java.util.Set[PosixFilePermission]): Short = {
-    import PosixFilePermission._
-    var m = 0
-    if (perms.contains(OWNER_READ)) m |= 0x100
-    if (perms.contains(OWNER_WRITE)) m |= 0x80
-    if (perms.contains(OWNER_EXECUTE)) m |= 0x40
-    if (perms.contains(GROUP_READ)) m |= 0x20
-    if (perms.contains(GROUP_WRITE)) m |= 0x10
-    if (perms.contains(GROUP_EXECUTE)) m |= 0x8
-    if (perms.contains(OTHERS_READ)) m |= 0x4
-    if (perms.contains(OTHERS_WRITE)) m |= 0x2
-    if (perms.contains(OTHERS_EXECUTE)) m |= 0x1
-    m.toShort
-  }
+  private val StatAttributes =
+    "unix:size,isDirectory,lastModifiedTime,lastAccessTime,mode,owner,group"
 
   private def nioPerms(p: FsPermission)
       : java.util.Set[PosixFilePermission] = {
@@ -92,17 +80,24 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
     }
   }
 
-  /** Eager status from one POSIX readAttributes syscall — permissions
-    * and owner/group included, so no later access can trigger the
-    * deprecated lazy `ls -ld` exec. */
+  /** Eager status from one `stat` (a single `unix:` readAttributes
+    * call) — permissions and owner/group included, so no later access
+    * can trigger the deprecated lazy `ls -ld` exec. The permission is
+    * built from the raw `st_mode` bits, as the stock `stat`-based status
+    * does, so the sticky bit survives (a PosixFilePermission set cannot
+    * carry sticky, setuid or setgid). */
   private def statusOf(f: Path): FileStatus = {
-    val attrs = Files.readAttributes(pathToFile(f).toPath,
-      classOf[PosixFileAttributes])
-    new FileStatus(attrs.size(), attrs.isDirectory, 1,
-      getDefaultBlockSize(f), attrs.lastModifiedTime.toMillis,
-      attrs.lastAccessTime.toMillis, new FsPermission(bits(
-        attrs.permissions())), attrs.owner().getName,
-      attrs.group().getName, null, makeQualified(f))
+    val a = Files.readAttributes(pathToFile(f).toPath, StatAttributes)
+    def time(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
+    new FileStatus(a.get("size").asInstanceOf[java.lang.Long],
+      a.get("isDirectory").asInstanceOf[java.lang.Boolean], 1,
+      getDefaultBlockSize(f), time("lastModifiedTime"),
+      time("lastAccessTime"),
+      new FsPermission((a.get("mode").asInstanceOf[Integer] & 0xfff)
+        .toShort),
+      a.get("owner").asInstanceOf[UserPrincipal].getName,
+      a.get("group").asInstanceOf[GroupPrincipal].getName, null,
+      makeQualified(f))
   }
 
   override def getFileStatus(f: Path): FileStatus =

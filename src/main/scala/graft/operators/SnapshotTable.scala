@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import graft.Engine
@@ -167,8 +168,10 @@ object SnapshotTable {
 
   /** Recursive (relative-path) listing of the table's data files,
     * manifests and markers excluded. Used ONLY by [[vacuum]] and
-    * [[truncateTo]] (reclamation must see orphans); no read or commit
-    * path lists data directories. */
+    * [[truncateTo]] (reclamation must see orphans). Reads never
+    * discover files: they take the manifest's file set and stat it
+    * with one driver-side `listStatus` per named partition directory
+    * ([[fileStatuses]]), never a recursive walk or a listing job. */
   private def listDataFiles(spark: SparkSession, tableDir: String)
       : Set[String] = {
     val root = new Path(tableDir)
@@ -186,6 +189,46 @@ object SnapshotTable {
         out += rel
     }
     out.result()
+  }
+
+  /** The FileStatus of each named table-relative file, from ONE
+    * driver-side `listStatus` per partition directory — no per-file
+    * RPC, no Spark job. Shared by [[scanFiles]] and the stream source
+    * (slice lengths). A file the manifest names but its directory lacks
+    * (a concurrent vacuum, a hand-deleted file) fails with its full
+    * path, never a bare key-not-found. */
+  private[graft] def fileStatuses(spark: SparkSession, tableDir: String,
+      rels: Seq[String]): Map[String, FileStatus] = {
+    val fs = fsOf(spark, new Path(tableDir))
+    rels.distinct.groupBy(r => r.take(r.lastIndexOf('/') max 0))
+      .flatMap { case (parentRel, rs) =>
+        val parent = fs.makeQualified(
+          if (parentRel.isEmpty) new Path(tableDir)
+          else new Path(s"$tableDir/$parentRel"))
+        val byName: Map[String, FileStatus] =
+          try fs.listStatus(parent).iterator
+            .map(st => st.getPath.getName -> st).toMap
+          catch { case _: FileNotFoundException => Map.empty }
+        rs.map(r => r -> byName.getOrElse(r.drop(r.lastIndexOf('/') + 1),
+          throw new FileNotFoundException(s"$tableDir/$r")))
+      }
+  }
+
+  /** The one builder of a DataFrame over manifest-named data files:
+    * [[fileStatuses]] stats them, and the scan is planned over those
+    * statuses ([[GraftSparkInternals.parquetScan]]) — the same
+    * LogicalRelation `spark.read.option("basePath", tableDir)
+    * .schema(schema).parquet(files: _*)` gives, minus Spark's re-listing
+    * of every file (a distributed job, one task per file, above 32
+    * paths). `files` must share one partition spec. With no `schema`
+    * (legacy tables, freshly staged files) the schema is inferred from
+    * the files' footers, `mergeSchema` choosing all or one. */
+  private def scanFiles(spark: SparkSession, tableDir: String,
+      files: Seq[String], schema: Option[StructType],
+      mergeSchema: Boolean = false): DataFrame = {
+    val statusOf = fileStatuses(spark, tableDir, files)
+    GraftSparkInternals.parquetScan(spark, tableDir, files.map(statusOf),
+      schema, Map("mergeSchema" -> mergeSchema.toString))
   }
 
   def latestVersion(spark: SparkSession, tableDir: String): Int = {
@@ -1282,8 +1325,7 @@ object SnapshotTable {
     import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
     val rootPath = fsOf(spark, new Path(tableDir))
       .makeQualified(new Path(tableDir)).toUri.getPath.stripSuffix("/")
-    val df = spark.read.option("basePath", tableDir)
-      .parquet(files.map(f => s"$tableDir/$f"): _*)
+    val df = scanFiles(spark, tableDir, files, None)
     val kinds = statsColumns.map { column =>
       val (kind, render) = df.schema(column).dataType match {
         case _: NumericType =>
@@ -1721,7 +1763,6 @@ object SnapshotTable {
   private[graft] def readWherePlanned(spark: SparkSession,
       tableDir: String, predicate: org.apache.spark.sql.Column,
       version: Option[Int] = None): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.GraftSparkInternals
     val v = version.getOrElse(latestVersion(spark, tableDir))
     require(v > 0, s"no snapshot at $tableDir")
     val (parts, zones) = pruningHintsOf(predicate)
@@ -1883,9 +1924,12 @@ object SnapshotTable {
     * chunks' files, `basePath` recovering the partition columns. The
     * schema comes from the ROOT's metadata (O(1), evolved columns read
     * as NULL for older files); `mergeSchema` only matters for
-    * metadata-only synthetic tables that carry no schema. Never lists
-    * data directories — at 100 TB the root IS the scan plan's file
-    * index. */
+    * metadata-only synthetic tables that carry no schema. The root
+    * names the files; the scan stats them with one driver-side
+    * `listStatus` per partition directory they sit in ([[scanFiles]])
+    * and never discovers files or runs a listing job. A named file
+    * missing from disk fails here, with a FileNotFoundException naming
+    * it. */
   def read(spark: SparkSession, tableDir: String,
       version: Option[Int] = None, mergeSchema: Boolean = false)
       : DataFrame = {
@@ -1964,15 +2008,11 @@ object SnapshotTable {
   private def readFileGroupsRaw(spark: SparkSession, tableDir: String,
       root: Root, files: Seq[String], mergeSchema: Boolean = false,
       withPos: Boolean = false): DataFrame = {
+    val schema = root.schemaJson.map(j =>
+      DataType.fromJson(j).asInstanceOf[StructType])
     val groups = files.groupBy(specOf).values.toSeq
     val frames = groups.map { g =>
-      val reader = root.schemaJson match {
-        case Some(j) => spark.read.option("basePath", tableDir)
-          .schema(DataType.fromJson(j).asInstanceOf[StructType])
-        case None => spark.read.option("basePath", tableDir)
-          .option("mergeSchema", mergeSchema.toString)
-      }
-      val base = reader.parquet(g.map(f => s"$tableDir/$f"): _*)
+      val base = scanFiles(spark, tableDir, g, schema, mergeSchema)
       if (!withPos) base
       else {
         // positional-delete addressing: (table-relative path, in-file
@@ -2923,8 +2963,7 @@ object SnapshotTable {
       if (newFiles.isEmpty)
         markers.limit(0)
       else {
-        val base = spark.read.option("basePath", tableDir)
-          .parquet(newFiles.map(f => s"$tableDir/$f"): _*)
+        val base = scanFiles(spark, tableDir, newFiles, None)
         val qual = fsOf(spark, new Path(tableDir))
           .makeQualified(new Path(tableDir)).toString
         val pat = "^(" + Seq(qual + "/",

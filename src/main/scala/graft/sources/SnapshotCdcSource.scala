@@ -423,26 +423,8 @@ private[graft] class SnapshotMicroBatchStream(o: SnapshotStreamOptions,
     val doomedOf = SnapshotTable.deletePositionsFor(spark, dir, to,
       added.map(_._1))
     val pcs = partCols.map(c => c -> full(c).dataType)
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // file lengths in one listStatus per PARTITION DIRECTORY instead of
-    // one getFileStatus RPC per slice (a wide window touches thousands)
-    val rels = (added.map(_._1) ++ delList.map(_._1) ++
-      spilledList.map(_._1)).distinct
-    val lenOf: Map[String, Long] = rels
-      .groupBy(_.split("/").init.mkString("/"))
-      .flatMap { case (parentRel, rs) =>
-        val parent =
-          if (parentRel.isEmpty) new Path(dir)
-          else new Path(s"$dir/$parentRel")
-        val byName = fs.listStatus(parent).iterator
-          .map(st => st.getPath.getName -> st.getLen).toMap
-        // a planned file vanished between manifest read and listing
-        // (concurrent vacuum): fail with the full path, as the per-file
-        // getFileStatus this replaced did — not a bare key-not-found
-        rs.map(r => r -> byName.getOrElse(r.split("/").last,
-          throw new java.io.FileNotFoundException(s"$dir/$r")))
-      }
+    val statusOf = SnapshotTable.fileStatuses(spark, dir,
+      added.map(_._1) ++ delList.map(_._1) ++ spilledList.map(_._1))
     def sliceOf(rel: String, positions: Array[Long], keep: Boolean,
         changeType: String, v: Int): SnapshotFileSlice = {
       val segs = rel.split("/").init.collect {
@@ -451,8 +433,9 @@ private[graft] class SnapshotMicroBatchStream(o: SnapshotStreamOptions,
       }.toMap
       val values = pcs.map { case (c, dt) =>
         partValue(segs.get(c), dt) }.toArray
-      SnapshotFileSlice(fs.makeQualified(new Path(s"$dir/$rel")).toString,
-        lenOf(rel), values, positions, keep, changeType, v, rel)
+      val st = statusOf(rel)
+      SnapshotFileSlice(st.getPath.toString, st.getLen, values, positions,
+        keep, changeType, v, rel)
     }
     val insertSlices = added.map { case (rel, v) =>
       sliceOf(rel, doomedOf.getOrElse(rel, Array.empty), keep = false,

@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -25,8 +28,12 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * when ParquetFileFormat itself guarantees whole batches for the
   * schema (`supportBatch` — the exact test FileSourceScanExec runs
   * before declaring a columnar scan), so the caller's columnar
-  * PartitionReader can cast unconditionally. */
-object GraftSparkInternals { // public: graft.sources is the one caller
+  * PartitionReader can cast unconditionally.
+  *
+  * Snapshot-table reads ([[parquetScan]]) are planned over the
+  * manifest's own file statuses, the way Delta's log-backed file index
+  * does, instead of letting `spark.read.parquet` list every file again. */
+object GraftSparkInternals { // public: graft.sources and operators call it
 
   private def cloned(spark: SparkSession, vectorized: Boolean)
       : org.apache.spark.sql.classic.SparkSession = {
@@ -148,6 +155,48 @@ object GraftSparkInternals { // public: graft.sources is the one caller
         }
       case _ => Nil
     }
+  }
+
+  /** A parquet scan of exactly `statuses` as a DataFrame, planned with
+    * no listing and no Spark job: the statuses reach Spark's own
+    * [[InMemoryFileIndex]] through a pre-filled [[FileStatusCache]], so
+    * the index finds every root path already "listed". The relation is
+    * the one `spark.read.options(options).option("basePath", basePath)
+    * .schema(schema).parquet(paths: _*)` resolves to — a LogicalRelation
+    * over that index, partition columns inferred from the paths under
+    * `basePath` (typed by `schema` where it names them), data schema =
+    * `schema` minus those columns — so partition pruning, `inputFiles`
+    * and the `_metadata` columns behave as on a listed read. With no
+    * `schema` the data schema is inferred from the same statuses'
+    * footers. */
+  def parquetScan(spark: SparkSession, basePath: String,
+      statuses: Seq[FileStatus], schema: Option[StructType],
+      options: Map[String, String]): DataFrame = {
+    val session =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val byPath = statuses.map(s => s.getPath -> Array(s)).toMap
+    // the manifest's files are immutable: nothing to re-list or evict
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byPath.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus])
+          : Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val opts = CaseInsensitiveMap(options + ("basePath" -> basePath))
+    val index = new InMemoryFileIndex(session, statuses.map(_.getPath),
+      opts, schema, listed)
+    val partitionSchema = index.partitionSchema
+    val format = new ParquetFileFormat()
+    val fileSchema = schema
+      .orElse(format.inferSchema(session, opts, statuses))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet schema in the ${statuses.size} files under $basePath"))
+    val resolver = session.sessionState.conf.resolver
+    val dataSchema = StructType(fileSchema.filterNot(f =>
+      partitionSchema.exists(p => resolver(p.name, f.name))))
+    session.baseRelationToDataFrame(HadoopFsRelation(index,
+      partitionSchema, dataSchema.asNullable, None, format, opts)(session))
   }
 
   def partitionedFile(partitionValues: InternalRow, absolutePath: String,

@@ -60,6 +60,17 @@ class Round18FixesSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/a.txt"), "hello".getBytes)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/b.txt"), "world!!".getBytes)
+    // sticky, setgid and setuid modes (chmod: neither PosixFilePermission
+    // nor FsPermission can request setuid/setgid)
+    new File(s"$dir/sticky").mkdirs()
+    Seq("sticky" -> "1777", "setgid.txt" -> "2755", "setuid.txt" -> "4755")
+      .foreach { case (n, mode) =>
+        if (n.endsWith(".txt")) java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$dir/$n"), Array.emptyByteArray)
+        val rc = new ProcessBuilder("chmod", mode, s"$dir/$n").start()
+          .waitFor()
+        assert(rc == 0, s"chmod $mode $n")
+      }
     val conf = new org.apache.hadoop.conf.Configuration(false)
     val stock = new RawLocalFileSystem()
     stock.initialize(java.net.URI.create("file:///"), conf)
@@ -79,10 +90,14 @@ class Round18FixesSpec extends SparkSpec {
         assert(a.getPermission == b.getPermission,
           s"${a.getPath}: stock=${a.getPermission} fast=${b.getPermission}")
       }
+    assert(fs.exists(st => st.getPath.getName == "sticky" &&
+      st.getPermission.getStickyBit), "sticky bit dropped")
     // single-file status parity too
-    val one = new HPath(new File(s"$dir/a.txt").getAbsolutePath)
-    assert(stock.getFileStatus(one).getPermission ==
-      fast.getFileStatus(one).getPermission)
+    Seq("a.txt", "sticky", "setgid.txt", "setuid.txt").foreach { n =>
+      val one = new HPath(new File(s"$dir/$n").getAbsolutePath)
+      assert(stock.getFileStatus(one).getPermission ==
+        fast.getFileStatus(one).getPermission, n)
+    }
     intercept[java.io.FileNotFoundException] {
       fast.getFileStatus(new HPath(s"$dir/definitely_missing"))
     }

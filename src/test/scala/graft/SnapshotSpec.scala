@@ -394,4 +394,99 @@ class SnapshotSpec extends SparkSpec {
       .count() == 1)
     assert(v2.count() > v1.count()) // inserts landed
   }
+
+  test("manifest reads plan without a listing job and match a listed read file for file") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = s"$base/listing_free"
+    wipe(dir)
+    // rebalance off + spark.range's contiguous slices: every task holds
+    // every month, so each writes one file per month — 36 per month in
+    // v1, 34 more per month in v2, well over Spark's 32-path
+    // parallel-listing threshold for every read below
+    def spread(from: Long, tasks: Int, months: Int) =
+      spark.range(from, from + tasks * months * 2, 1, tasks).select(
+        concat(lit("K"), col("id") % months + 1, lit("-"), col("id"))
+          .as("claim_id"),
+        lit(s"b$from").as("batch_id"), col("id").cast("double")
+          .as("claim_amount"), lit(2000).as("service_year"),
+        (col("id") % months + 1).cast("int").as("service_month"))
+    SnapshotTable.append(spark, dir, spread(0, 36, 3), rebalance = false)
+    SnapshotTable.append(spark, dir, spread(1000, 34, 2), rebalance = false)
+    val doomed = Seq("K1-0", "K3-5", "K1-1000")
+    assert(SnapshotTable.deleteKeysMor(spark, dir,
+      doomed.toDF("claim_id")).contains(3))
+    assert(SnapshotTable.liveDeletes(spark, dir)._1.nonEmpty)
+    val live = SnapshotTable.manifest(spark, dir, 3).files
+    assert(live.size == 36 * 3 + 34 * 2, live.size)
+    val rootSchema = SnapshotTable.tableSchema(spark, dir).get
+    val visible = !col("claim_id").isin(doomed: _*)
+    def listed(files: Seq[String]): DataFrame =
+      spark.read.option("basePath", dir).schema(rootSchema)
+        .parquet(files.map(f => s"$dir/$f"): _*)
+    def check(name: String, build: => DataFrame, files: Seq[String],
+        expected: DataFrame => DataFrame): Unit = {
+      assert(files.size > 32, s"$name names only ${files.size} files")
+      val jobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT
+      val before = jobs.getCount
+      val df = build
+      val got = df.collect()
+      assert(jobs.getCount == before, s"$name ran a listing job")
+      val ref = expected(listed(files))
+      assert(df.schema == ref.schema, s"$name schema")
+      // the delete sidecar the read anti-joins is an input file too
+      val dataFiles = df.inputFiles.filterNot(_.contains("/_snapshots/"))
+      assert(dataFiles.toSet == ref.inputFiles.toSet, s"$name files")
+      assert(dataFiles.length == files.size, s"$name file count")
+      assert(got.map(_.toString).sorted.toSeq ==
+        ref.collect().map(_.toString).sorted.toSeq, s"$name rows")
+      // `_metadata` does not resolve above the delete anti-join, so it
+      // is read off the plan's data-file relation itself
+      val scans = df.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation
+      }.collect {
+        case h: HadoopFsRelation if !h.location.rootPaths
+            .exists(_.toString.contains("/_snapshots/")) => h
+      }
+      assert(scans.size == 1, s"$name scans")
+      val meta = spark.baseRelationToDataFrame(scans.head)
+        .select(col("_metadata.file_path"), col("_metadata.file_size"),
+          col("_metadata.file_modification_time"))
+        .distinct().collect()
+      assert(meta.length == files.size, s"$name metadata rows")
+      meta.foreach { r =>
+        val f = new File(new java.net.URI(r.getString(0)))
+        assert(r.getLong(1) == f.length(), s"$name size of $f")
+        assert(r.getTimestamp(2).getTime == f.lastModified(),
+          s"$name mtime of $f")
+      }
+    }
+    check("read", SnapshotTable.read(spark, dir), live,
+      _.filter(visible))
+    val month1 = col("service_year") === 2000 && col("service_month") === 1
+    check("readWhere", SnapshotTable.readWhere(spark, dir, month1),
+      live.filter(_.startsWith("service_year=2000/service_month=1/")),
+      _.filter(month1 && visible))
+    check("readFilesAdded", SnapshotTable.readFilesAdded(spark, dir, 1, 3),
+      live.filterNot(SnapshotTable.manifest(spark, dir, 1).files.toSet),
+      _.filter(visible))
+    val keys = Seq("K2-1", "K3-5", "K2-1001", "K1-3").toDF("claim_id")
+    check("readKeys", SnapshotTable.readKeys(spark, dir, keys, "claim_id"),
+      SnapshotTable.candidateFilesForKeys(spark, dir, keys, "claim_id", 3),
+      _.join(keys, Seq("claim_id"), "leftsemi").filter(visible))
+    assert(SnapshotTable.readKeys(spark, dir, keys, "claim_id").count() == 3)
+  }
+
+  test("a manifest-named file missing from disk fails the read with its path") {
+    val dir = s"$base/missing_file"
+    wipe(dir)
+    SnapshotTable.append(spark, dir, rows(4, 1, "b1").unionByName(rows(4, 2, "b1")))
+    val rel = SnapshotTable.manifest(spark, dir, 1).files.head
+    assert(new File(s"$dir/$rel").delete())
+    val e = intercept[java.io.FileNotFoundException] {
+      SnapshotTable.read(spark, dir)
+    }
+    assert(e.getMessage.contains(rel), e.getMessage)
+  }
 }
