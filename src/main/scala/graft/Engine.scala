@@ -18,9 +18,10 @@ object Engine {
     * so on-disk layout (.crc sidecars included) is byte-identical. A
     * cluster store (HDFS/S3) is untouched: only the `file` scheme is
     * remapped, which at 100 TB scale is test/driver plumbing, not the
-    * data path. Idempotent; evicts at most one pre-wiring cached
-    * LocalFileSystem instance (closing a LocalFileSystem only drops it
-    * from Hadoop's cache — it holds no state open streams depend on). */
+    * data path. Idempotent. A pre-wiring `file://` instance already in
+    * Hadoop's shared cache is unregistered, never closed: whoever holds
+    * it keeps a working file system and its delete-on-exit paths stay
+    * pending. */
   private def installFastLocalFs(spark: SparkSession): Unit = {
     val impl = "graft.fs.FastLocalFileSystem"
     val hc = spark.sparkContext.hadoopConfiguration
@@ -28,7 +29,7 @@ object Engine {
     val uri = java.net.URI.create("file:///")
     val cached = org.apache.hadoop.fs.FileSystem.get(uri, hc)
     if (!cached.isInstanceOf[graft.fs.FastLocalFileSystem]) {
-      cached.close() // drops the pre-wiring instance from the FS cache
+      org.apache.hadoop.fs.GraftFsCache.forget(uri, hc, cached)
       org.apache.hadoop.fs.FileSystem.get(uri, hc) // caches ours
     }
   }

@@ -2,9 +2,14 @@ package graft.operators
 
 import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, GraftSparkInternals, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals, GraftSqlBridge,
+  Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Engine
 
 /** A writer's overwrite/merge/delete raced a commit that changed the
@@ -1955,55 +1960,63 @@ object SnapshotTable {
     * root's schema types every group identically (partition columns
     * present in an explicit schema take their values from the path).
     *
-    * Live equality deletes apply HERE, at the one funnel every
-    * manifest-resolved read goes through (merge-on-read): files are
-    * grouped by WHICH deletes reach them (a delete touches only files
-    * with data sequence <= its seq — a later re-insert of the key is
-    * untouched), each group anti-joins the union of its applicable
-    * doomed-key sets, and the groups union back. Small key sets (known
-    * from commit metadata) broadcast; the cost is one hash anti-join
-    * per read until compaction or natural rewrite folds the delete
-    * away — the standard MoR trade, chosen so the DELETE itself is
-    * O(deleted keys), never a partition rewrite. */
+    * Live deletes apply HERE, at the one funnel every manifest-resolved
+    * read goes through (merge-on-read), under Iceberg's sequence rule: a
+    * row is gone when a live delete with `seq` ≥ its file's data
+    * sequence names it (a later re-insert of a key is untouched). Files
+    * are grouped by the deletes that reach them; each group filters its
+    * rows against those deletes' key sets and positions, and the groups
+    * union back. A delete set of at most [[LiteralDeleteRows]] rows is
+    * read once on the driver ([[sidecar]], cached by its immutable
+    * name) and enters the plan as an `InSet` literal, so applying it
+    * plans and runs no Spark job of its own: a read costs the job that
+    * runs it, however many refs are live. Larger sets anti-join their
+    * known-schema sidecar scan. A null key survives, as under an
+    * anti-join. */
   private def readFileGroups(spark: SparkSession, tableDir: String,
       root: Root, files: Seq[String], mergeSchema: Boolean = false,
       keepPos: Boolean = false): DataFrame = {
     if (root.deletes.isEmpty && root.posDeletes.isEmpty && !keepPos)
       return readFileGroupsRaw(spark, tableDir, root, files, mergeSchema)
-    val seqOf: Map[String, Long] = root.chunks.flatMap { c =>
-      val ce = chunkEntry(spark, tableDir, c.name)
-      ce.files.map(f => f -> ce.seqs.getOrElse(f, 0L))
-    }.toMap
-    val byDeletes = files.groupBy { f =>
+    val seqOf = fileSeqs(spark, tableDir, root)
+    val frames = files.groupBy { f =>
       val s = seqOf.getOrElse(f, 0L)
       (root.deletes.filter(_.seq >= s), root.posDeletes.filter(_.seq >= s))
-    }
-    val frames = byDeletes.toSeq.map { case ((dels, pds), fs) =>
-      val raw = readFileGroupsRaw(spark, tableDir, root, fs, mergeSchema,
-        withPos = keepPos || pds.nonEmpty)
-      val posApplied =
-        if (pds.isEmpty) raw
-        else {
-          val dv = pds.map(d => spark.read
-              .parquet(s"$tableDir/_snapshots/${d.name}")
-              .select(col("__rel"), col("__ri")))
-            .reduce(_.unionByName(_)).distinct()
-          val rhs = if (pds.map(_.rows).sum <= 1000000L) broadcast(dv)
-            else dv
-          val anti = raw.join(rhs, Seq("__rel", "__ri"), "left_anti")
-          if (keepPos) anti else anti.drop("__rel", "__ri")
-        }
-      dels.groupBy(_.keyCol).foldLeft(posApplied) { case (df, (kc, ds)) =>
-        val keys = ds.map(d => spark.read
-            .parquet(s"$tableDir/_snapshots/${d.name}").select(col(kc)))
-          .reduce(_.unionByName(_)).distinct()
-        val rhs = if (ds.map(_.rows).sum <= 1000000L) broadcast(keys)
-          else keys
-        df.join(rhs, Seq(kc), "left_anti")
+    }.toSeq.map { case ((dels, pds), fs) =>
+      val positions = literalPositions(spark, tableDir, pds)
+      // only files a positional delete names need the (__rel, __ri)
+      // address columns; a set too large to hold names them all
+      val posFiles =
+        if (keepPos || (pds.nonEmpty && positions.isEmpty)) fs
+        else positions.map(p => fs.filter(p._1.contains)).getOrElse(Nil)
+      val posSet = posFiles.toSet
+      val plainFiles = fs.filterNot(posSet.contains)
+      val parts = Seq(plainFiles -> false, posFiles -> true).collect {
+        case (g, withPos) if g.nonEmpty =>
+          val raw = readFileGroupsRaw(spark, tableDir, root, g, mergeSchema,
+            withPos)
+          if (!withPos) raw
+          else {
+            val applied = withoutPositions(spark, tableDir, raw, pds,
+              positions)
+            if (keepPos) applied else applied.drop("__rel", "__ri")
+          }
+      }
+      val df = parts.reduce(_.unionByName(_, allowMissingColumns = true))
+      dels.groupBy(_.keyCol).foldLeft(df) { case (d, (kc, ds)) =>
+        withoutKeys(spark, tableDir, d, kc, ds)
       }
     }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** Each live file's data sequence (0 = written before sequences). */
+  private def fileSeqs(spark: SparkSession, tableDir: String, root: Root)
+      : Map[String, Long] =
+    root.chunks.flatMap { c =>
+      val ce = chunkEntry(spark, tableDir, c.name)
+      ce.files.map(f => f -> ce.seqs.getOrElse(f, 0L))
+    }.toMap
 
   private def readFileGroupsRaw(spark: SparkSession, tableDir: String,
       root: Root, files: Seq[String], mergeSchema: Boolean = false,
@@ -2031,6 +2044,200 @@ object SnapshotTable {
     }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  // ------------------------------------------------------------------
+  // Delete sidecars: one known-schema reader, driver-side small sets
+  // ------------------------------------------------------------------
+
+  /** Delete sets of at most this many rows apply as plan literals read
+    * on the driver; larger ones anti-join their sidecar scan. */
+  private val LiteralDeleteRows = 1000000L
+
+  /** A positional-delete sidecar's rows: table-relative path, in-file
+    * row index. */
+  private val PosSchema = StructType(Seq(StructField("__rel", StringType),
+    StructField("__ri", LongType)))
+
+  /** One delete sidecar directory: its parquet files (one driver-side
+    * `listStatus`), its schema ([[PosSchema]], or the key column's type
+    * as one file's footer records it, so a sidecar written before keys
+    * were cast to the table's type still reads) and, for a set of at
+    * most [[LiteralDeleteRows]] rows, the rows themselves. */
+  private final case class Sidecar(statuses: Seq[FileStatus],
+      schema: StructType, rows: Option[Array[InternalRow]])
+
+  /** Loaded sidecars by path. Sidecars are immutable under writer-unique
+    * names, so an entry never goes stale; at most [[SidecarCacheRows]]
+    * rows stay loaded, least recently used evicted first. */
+  private val sidecarCache =
+    new java.util.LinkedHashMap[String, Sidecar](16, 0.75f, true)
+  private var sidecarCacheLoad = 0L
+  private val SidecarCacheRows = 1000000L
+
+  private def sidecar(spark: SparkSession, tableDir: String, name: String,
+      rows: Long, schema: Option[StructType] = None): Sidecar = {
+    val key = s"$tableDir/_snapshots/$name"
+    val hit = sidecarCache.synchronized(sidecarCache.get(key))
+    if (hit != null) return hit
+    val statuses = sidecarFiles(spark, tableDir, name)
+    val sch = schema.getOrElse(statuses.headOption
+      .map(GraftSparkInternals.parquetFileSchema(spark, _))
+      .getOrElse(new StructType()))
+    val loaded =
+      if (rows > LiteralDeleteRows) None
+      else Some(GraftSparkInternals.parquetRowsOnDriver(spark, statuses, sch))
+    val sc = Sidecar(statuses, sch, loaded)
+    def load(e: Sidecar) = e.rows.map(_.length.toLong).getOrElse(0L)
+    sidecarCache.synchronized {
+      val old = sidecarCache.put(key, sc)
+      sidecarCacheLoad += load(sc) - (if (old == null) 0L else load(old))
+      val it = sidecarCache.values().iterator()
+      while (sidecarCacheLoad > SidecarCacheRows && it.hasNext) {
+        sidecarCacheLoad -= load(it.next())
+        it.remove()
+      }
+    }
+    sc
+  }
+
+  /** The parquet files of sidecar directory `name`. */
+  private def sidecarFiles(spark: SparkSession, tableDir: String,
+      name: String): Seq[FileStatus] = {
+    val dir = new Path(snapDir(tableDir), name)
+    try fsOf(spark, dir).listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
+        !n.startsWith(".")
+    } catch {
+      case _: FileNotFoundException =>
+        throw new FileNotFoundException(s"delete sidecar $dir is missing")
+    }
+  }
+
+  /** A sidecar as a DataFrame over its own files and schema: no listing
+    * job, no inference job. */
+  private def sidecarScan(spark: SparkSession, sc: Sidecar): DataFrame =
+    if (sc.statuses.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), sc.schema)
+    else GraftSparkInternals.parquetScan(spark,
+      sc.statuses.head.getPath.getParent.toString, sc.statuses,
+      Some(sc.schema), Map.empty)
+
+  /** The type the root's schema gives column `c`, if it records one. */
+  private def rootType(root: Root, c: String): Option[DataType] =
+    root.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .flatMap(_.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
+
+  /** The distinct non-null keys of equality sidecars `ds` as one column
+    * `kc`, cast to `dt` when given. */
+  private def keyFrame(spark: SparkSession, tableDir: String,
+      ds: Seq[DeleteRef], kc: String, dt: Option[DataType]): DataFrame = {
+    val frames = ds.flatMap { d =>
+      val sc = sidecar(spark, tableDir, d.name, d.rows)
+      sc.schema.fields.find(_.name.equalsIgnoreCase(d.keyCol)).map { f =>
+        sidecarScan(spark, sc)
+          .select(dt.fold(col(f.name))(col(f.name).cast(_)).as(kc))
+      }
+    }
+    frames.reduceOption(_.unionByName(_)).getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField(kc, dt.getOrElse(StringType))))))
+      .filter(col(kc).isNotNull).distinct()
+  }
+
+  /** The distinct positions of positional sidecars `ds`. */
+  private def posFrame(spark: SparkSession, tableDir: String,
+      ds: Seq[PosDeleteRef]): DataFrame =
+    ds.map(d => sidecarScan(spark,
+        sidecar(spark, tableDir, d.name, d.rows, Some(PosSchema))))
+      .reduce(_.unionByName(_)).distinct()
+
+  /** The non-null keys of equality sidecars `ds` as Catalyst values of
+    * `dt` (a key that does not cast can never equal a value of the
+    * column), or None when the sets hold more than [[LiteralDeleteRows]]
+    * rows. */
+  private def literalKeys(spark: SparkSession, tableDir: String,
+      ds: Seq[DeleteRef], dt: DataType): Option[Set[Any]] =
+    if (ds.map(_.rows).sum > LiteralDeleteRows) None
+    else Some {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode,
+        Literal}
+      val tz = Some(SQLConf.get.sessionLocalTimeZone)
+      val out = scala.collection.mutable.HashSet.empty[Any]
+      ds.foreach { d =>
+        val sc = sidecar(spark, tableDir, d.name, d.rows)
+        val i = sc.schema.fields.indexWhere(_.name.equalsIgnoreCase(d.keyCol))
+        if (i >= 0) {
+          val src = sc.schema(i).dataType
+          sc.rows.get.foreach { r =>
+            if (!r.isNullAt(i)) {
+              val v = r.get(i, src)
+              val k = if (src == dt) v
+                else Cast(Literal(v, src), dt, tz, EvalMode.TRY).eval()
+              if (k != null) out += k
+            }
+          }
+        }
+      }
+      out.toSet
+    }
+
+  /** Positional sidecars `ds` as (the files they name, their positions
+    * rendered `path#index`), or None when there are none or they hold
+    * more than [[LiteralDeleteRows]] rows. */
+  private def literalPositions(spark: SparkSession, tableDir: String,
+      ds: Seq[PosDeleteRef]): Option[(Set[String], Set[Any])] =
+    if (ds.isEmpty || ds.map(_.rows).sum > LiteralDeleteRows) None
+    else Some {
+      val rels = scala.collection.mutable.HashSet.empty[String]
+      val keys = scala.collection.mutable.HashSet.empty[Any]
+      ds.foreach { d =>
+        sidecar(spark, tableDir, d.name, d.rows, Some(PosSchema)).rows.get
+          .foreach { r =>
+            val rel = r.getUTF8String(0)
+            rels += rel.toString
+            keys += UTF8String.fromString(s"$rel#${r.getLong(1)}")
+          }
+      }
+      (rels.toSet, keys.toSet)
+    }
+
+  private def inSet(c: org.apache.spark.sql.Column, values: Set[Any])
+      : org.apache.spark.sql.Column =
+    GraftSqlBridge.toColumn(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        GraftSqlBridge.toExpression(c), values))
+
+  /** `df` without the rows equality deletes `ds` name in column `kc`. */
+  private def withoutKeys(spark: SparkSession, tableDir: String,
+      df: DataFrame, kc: String, ds: Seq[DeleteRef]): DataFrame = {
+    val dt = df.schema.fields.find(_.name.equalsIgnoreCase(kc))
+      .map(_.dataType).getOrElse(throw new IllegalStateException(
+        s"delete key column $kc is not in the table at $tableDir"))
+    literalKeys(spark, tableDir, ds, dt) match {
+      case Some(keys) if keys.isEmpty => df
+      case Some(keys) => df.filter(col(kc).isNull || !inSet(col(kc), keys))
+      case None =>
+        df.join(keyFrame(spark, tableDir, ds, kc, Some(dt)), Seq(kc),
+          "left_anti")
+    }
+  }
+
+  /** `df` (carrying `__rel`, `__ri`) without the positions `ds` name;
+    * `positions` is [[literalPositions]] of `ds`. */
+  private def withoutPositions(spark: SparkSession, tableDir: String,
+      df: DataFrame, ds: Seq[PosDeleteRef],
+      positions: Option[(Set[String], Set[Any])]): DataFrame =
+    if (ds.isEmpty) df
+    else positions match {
+      case Some((rels, keys)) =>
+        df.filter(!(inSet(col("__rel"), rels.map(UTF8String.fromString)) &&
+          inSet(concat(col("__rel"), lit("#"), col("__ri").cast("string")),
+            keys)))
+      case None =>
+        df.join(posFrame(spark, tableDir, ds), Seq("__rel", "__ri"),
+          "left_anti")
+    }
 
   // ------------------------------------------------------------------
   // Named refs (branch/tag model) + write-audit-publish
@@ -2228,7 +2435,7 @@ object SnapshotTable {
     val keptChunks = keptRoots.flatMap(_.chunks.map(_.name)).toSet
     val keptDeletes = keptRoots.flatMap(r =>
       r.deletes.map(_.name) ++ r.posDeletes.map(_.name)).toSet
-    val keptBlooms = keptRoots.flatMap(_.meta.get("bloom.index")).toSet
+    val keptBlooms = keptRoots.flatMap(r => bloomNames(r.meta)).toSet
     val root = new Path(tableDir)
     val fs = fsOf(spark, root)
     val doomed = (listDataFiles(spark, tableDir) -- referenced).toSeq.sorted
@@ -2291,7 +2498,7 @@ object SnapshotTable {
       val keptChunks = keptRoots.flatMap(_.chunks.map(_.name)).toSet
       val keptDeletes = keptRoots.flatMap(r =>
         r.deletes.map(_.name) ++ r.posDeletes.map(_.name)).toSet
-      val keptBlooms = keptRoots.flatMap(_.meta.get("bloom.index")).toSet
+      val keptBlooms = keptRoots.flatMap(r => bloomNames(r.meta)).toSet
       val keptFiles = keptRoots
         .flatMap(r => resolveFiles(spark, tableDir, r)).toSet
       ((v + 1) to latest).foreach(i =>
@@ -2531,9 +2738,8 @@ object SnapshotTable {
         if ((newEq.isEmpty && newPos.isEmpty) || parentRoot == null) Nil
         else {
           val eqFrames = newEq.map { d =>
-            val keys = spark.read
-              .parquet(s"$tableDir/_snapshots/${d.name}")
-              .select(col(d.keyCol))
+            val keys = keyFrame(spark, tableDir, Seq(d), d.keyCol,
+              rootType(parentRoot, d.keyCol))
             val cands = candidateFilesForKeys(spark, tableDir, keys,
               d.keyCol, v - 1)
             if (cands.isEmpty) None
@@ -2542,9 +2748,7 @@ object SnapshotTable {
                 Seq(d.keyCol), "leftsemi"))
           }
           val posFrames = newPos.map { d =>
-            val pos = spark.read
-              .parquet(s"$tableDir/_snapshots/${d.name}")
-              .select(col("__rel"), col("__ri"))
+            val pos = posFrame(spark, tableDir, Seq(d))
             val refFiles = pos.select(col("__rel")).distinct()
               .collect().map(_.getString(0)).toSeq
             if (refFiles.isEmpty) None
@@ -2687,10 +2891,7 @@ object SnapshotTable {
       maxPositions: Long = 2000000L): Map[String, Array[Long]] = {
     val root = readRoot(spark, tableDir, version)
     if (root.deletes.isEmpty && root.posDeletes.isEmpty) return Map.empty
-    val seqOf = root.chunks.flatMap { c =>
-      val ce = chunkEntry(spark, tableDir, c.name)
-      ce.files.map(f => f -> ce.seqs.getOrElse(f, 0L))
-    }.toMap
+    val seqOf = fileSeqs(spark, tableDir, root)
     val byDeletes = files.groupBy { f =>
       val s = seqOf.getOrElse(f, 0L)
       (root.deletes.filter(_.seq >= s), root.posDeletes.filter(_.seq >= s))
@@ -2702,10 +2903,7 @@ object SnapshotTable {
         val fsDf = broadcast(fs.toDF("__rel"))
         val eq = if (dels.isEmpty) Nil else {
           dels.groupBy(_.keyCol).toSeq.flatMap { case (kc, ds) =>
-            val keys = ds.map(d => spark.read
-                .parquet(s"$tableDir/_snapshots/${d.name}")
-                .select(col(kc)))
-              .reduce(_.unionByName(_)).distinct()
+            val keys = keyFrame(spark, tableDir, ds, kc, rootType(root, kc))
             // zone-probe first: only files whose key zones can hold a
             // doomed key get scanned (a key-clustered table's backfill
             // then decodes a slice, not every reached file)
@@ -2723,9 +2921,7 @@ object SnapshotTable {
             }
           }
         }
-        val pos = pds.map(d => spark.read
-          .parquet(s"$tableDir/_snapshots/${d.name}")
-          .select(col("__rel"), col("__ri"))
+        val pos = pds.map(d => posFrame(spark, tableDir, Seq(d))
           .join(fsDf, Seq("__rel"), "leftsemi"))
         eq ++ pos
       }
@@ -2797,13 +2993,9 @@ object SnapshotTable {
     val newEq = root.deletes.filterNot(d => prevNames.contains(d.name))
     val newPos = root.posDeletes.filterNot(d => prevNames.contains(d.name))
     if (newEq.isEmpty && newPos.isEmpty) return None
-    val posFrames = newPos.map(d => spark.read
-      .parquet(s"$tableDir/_snapshots/${d.name}")
-      .select(col("__rel"), col("__ri")))
+    val posFrames = newPos.map(d => posFrame(spark, tableDir, Seq(d)))
     val eqFrames = newEq.groupBy(_.keyCol).toSeq.flatMap { case (kc, ds) =>
-      val keys = ds.map(d => spark.read
-          .parquet(s"$tableDir/_snapshots/${d.name}").select(col(kc)))
-        .reduce(_.unionByName(_)).distinct()
+      val keys = keyFrame(spark, tableDir, ds, kc, rootType(parentRoot, kc))
       val cands = candidateFilesForKeys(spark, tableDir, keys, kc,
         version - 1)
       if (cands.isEmpty) Nil
@@ -2934,17 +3126,33 @@ object SnapshotTable {
   // files — the verify semi-join downstream stays the truth.
   // ------------------------------------------------------------------
 
-  private final case class BloomMeta(name: String, mBits: Long, k: Int,
-      columns: Seq[String])
+  /** A live index: `names` are its sidecars, the base first, then the
+    * deltas [[refreshFileBlooms]] added (`bloom.index` lists them
+    * comma-separated; an index of one sidecar is its bare name). */
+  private final case class BloomMeta(names: Seq[String], mBits: Long,
+      k: Int, columns: Seq[String])
+
+  private def bloomNames(meta: Map[String, String]): Seq[String] =
+    meta.get("bloom.index").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
 
   private def bloomMetaOf(meta: Map[String, String]): Option[BloomMeta] =
     for {
-      name <- meta.get("bloom.index")
+      _ <- meta.get("bloom.index")
       m <- meta.get("bloom.mbits").map(_.toLong)
       k <- meta.get("bloom.k").map(_.toInt)
       cols <- meta.get("bloom.columns")
         .map(_.split(",").filter(_.nonEmpty).map(dec).toSeq)
-    } yield BloomMeta(name, m, k, cols)
+    } yield BloomMeta(bloomNames(meta), m, k, cols)
+
+  private val BloomSchema = StructType(Seq(StructField("__c", StringType),
+    StructField("__f", StringType), StructField("__wi", IntegerType),
+    StructField("__mask", LongType)))
+
+  /** One Bloom sidecar's rows, read with its known schema. */
+  private def bloomScan(spark: SparkSession, tableDir: String, name: String)
+      : DataFrame =
+    sidecarScan(spark,
+      Sidecar(sidecarFiles(spark, tableDir, name), BloomSchema, None))
 
   /** Distributed sidecar build over `newFiles` (raw file content —
     * a Bloom bit for a MoR-deleted row is just a false positive), one
@@ -3035,10 +3243,16 @@ object SnapshotTable {
 
   /** Incremental index maintenance: cover the live files the current
     * index does NOT cover (appended or rewritten since the last
-    * build), reusing the existing sidecar's rows for still-live files
-    * — cost ∝ NEW data, never ∝ table. Same geometry as the published
-    * index (one probe, one geometry). Returns the committed version,
-    * or None when there is no index or nothing is uncovered. */
+    * build) with a DELTA sidecar of their words alone, appended to the
+    * index's sidecar list — cost ∝ NEW data, never ∝ table. Sidecars
+    * covering no live file leave the list. When the deltas would cover
+    * more live files than the base, the list folds back into one
+    * sidecar instead (the base's and deltas' live rows plus the new
+    * words), so a probe reads a bounded number of sidecars and the
+    * folds' cost amortizes to O(new data). Same geometry as the
+    * published index (one probe, one geometry). Returns the committed
+    * version, or None when there is no index or nothing is
+    * uncovered. */
   def refreshFileBlooms(spark: SparkSession, tableDir: String)
       : Option[Int] = {
     import spark.implicits._
@@ -3047,19 +3261,31 @@ object SnapshotTable {
     val root = readRoot(spark, tableDir, v)
     val bm = bloomMetaOf(root.meta).getOrElse(return None)
     val live = resolveFiles(spark, tableDir, root)
-    val old = spark.read.parquet(s"$tableDir/_snapshots/${bm.name}")
     val liveSet = live.toSet
-    val covered = old.filter(col("__wi") === -1).select(col("__f"))
-      .distinct().collect().map(_.getString(0)).filter(liveSet.contains)
-      .toSet
-    val uncovered = live.filterNot(covered.contains)
+    // (sidecar, live file it covers), from the coverage markers
+    val covered = bm.names.map(n => bloomScan(spark, tableDir, n)
+        .filter(col("__wi") === -1).select(lit(n).as("__s"), col("__f")))
+      .reduce(_.unionByName(_)).distinct().collect()
+      .map(r => (r.getString(0), r.getString(1)))
+      .filter(c => liveSet.contains(c._2)).toSeq
+    val coveredFiles = covered.map(_._2).toSet
+    val uncovered = live.filterNot(coveredFiles.contains)
     if (uncovered.isEmpty) return None
+    val perSidecar = covered.groupBy(_._1).view.mapValues(_.size).toMap
+    val kept = bm.names.filter(perSidecar.contains)
     val name = s"blooms/bloom_${java.util.UUID.randomUUID()}"
-    val liveDf = broadcast(live.toDF("__f"))
+    val fold = kept.nonEmpty &&
+      kept.tail.map(perSidecar).sum + uncovered.size > perSidecar(kept.head)
+    val reuse =
+      if (!fold) None
+      else Some(kept.map(bloomScan(spark, tableDir, _))
+        .reduce(_.unionByName(_))
+        .join(broadcast(live.toDF("__f")), Seq("__f")))
     writeBloomSidecar(spark, tableDir, name, uncovered, bm.columns,
-      bm.mBits, bm.k, reuse = Some(old.join(liveDf, Seq("__f"))))
+      bm.mBits, bm.k, reuse)
+    val index = if (fold) Seq(name) else kept :+ name
     commitGated(spark, tableDir, "bloom-refresh",
-      extraMeta = Map("bloom.index" -> name)) { parent =>
+      extraMeta = Map("bloom.index" -> index.mkString(","))) { parent =>
       val r = readRoot(spark, tableDir, parent)
       (r.chunks, r.schemaJson)
     }
@@ -3085,10 +3311,12 @@ object SnapshotTable {
     // the index hashed the COLUMN's cast-to-string rendering; probe in
     // the same domain or a differently-typed key false-negatives
     val keys = canonicalProbeKeys(root, keys0, key)
-    val dir = new Path(s"$tableDir/_snapshots/${bm.name}")
-    if (!fsOf(spark, dir).exists(dir)) return cands // vacuumed: degrade
+    val dirs = bm.names.map(n => new Path(snapDir(tableDir), n))
+    if (!dirs.forall(d => fsOf(spark, d).exists(d)))
+      return cands // vacuumed: degrade
     val candsDf = broadcast(cands.toDF("__f"))
-    val side = spark.read.parquet(dir.toString)
+    val side = bm.names.map(bloomScan(spark, tableDir, _))
+      .reduce(_.unionByName(_))
       .filter(col("__c") === key).join(candsDf, Seq("__f"))
     val covered = side.filter(col("__wi") === -1).select(col("__f"))
       .distinct().collect().map(_.getString(0)).toSet
@@ -3403,7 +3631,8 @@ object SnapshotTable {
     // re-ran it, doubling deleteWhere's heavy phase; two further
     // re-reads of the sidecar collected count and distinct refs. One
     // small aggregation over the sidecar replaces all three jobs.)
-    val perFile = spark.read.parquet(delDir)
+    val perFile = sidecarScan(spark,
+        Sidecar(sidecarFiles(spark, tableDir, name), PosSchema, None))
       .groupBy(col("__rel")).agg(count(lit(1)).as("__n")).collect()
     val n = perFile.iterator.map(_.getLong(1)).sum
     if (n == 0) {
@@ -3626,9 +3855,16 @@ object SnapshotTable {
     // feed: delete-marker keys ∪ surviving insert keys ≡ all feed keys
     // (an insert key the latest-marker rule filters out has a newer
     // delete marker, which is in the set anyway) — so this consumer
-    // needs neither the window nor the delV join, just one distinct
+    // needs neither the window nor the delV join, just one distinct.
+    // Keys no live file's zone can hold have nothing to retract, so an
+    // insert-only feed of new keys commits no ref at all; the zone test
+    // rides the sidecar write as literals (no job of its own)
+    val v = latestVersion(spark, tableDir)
+    val mayExist = zoneKeyFilter(spark, tableDir, readRoot(spark, tableDir, v),
+      key, feed.schema(key).dataType)
     val delKeys = feed.select(col(key))
-      .filter(col(key).isNotNull).distinct()
+      .filter(col(key).isNotNull && mayExist.getOrElse(lit(true)))
+      .distinct()
     val name = s"deletes/del_${java.util.UUID.randomUUID()}"
     val delDir = s"$tableDir/_snapshots/$name"
     delKeys.hint("rebalance").write.mode("overwrite").parquet(delDir)
@@ -3642,14 +3878,69 @@ object SnapshotTable {
       if (nKeys == 0) { // insert-only feed of all-null keys: rows alone
         fsOf(spark, new Path(delDir)).delete(new Path(delDir), true)
         (p, _) => p.map(_.deletes).getOrElse(Nil)
-      } else (p, parent) => p.map(_.deletes).getOrElse(Nil) :+
-        DeleteRef(name, key, parent.toLong, nKeys)
+      } else (p, parent) => {
+        // the zone test ran at v: a file committed since could hold a
+        // key it excluded
+        if (parent != v && mayExist.nonEmpty)
+          throw new SnapshotConflictException(s"apply-feed at $tableDir " +
+            s"tested key zones at v$v but v$parent committed since — " +
+            "re-apply the feed")
+        p.map(_.deletes).getOrElse(Nil) :+
+          DeleteRef(name, key, parent.toLong, nKeys)
+      }
     val committed = commitRetryingGated(spark, tableDir, "apply-feed",
       created, Nil,
       if (statsColumns.isEmpty) Seq(key) else statsColumns,
       None, Some(insRows.schema), deletesOf = deletesOf)
     debtRatio.foreach(r => autoCompactMor(spark, tableDir, r))
     committed
+  }
+
+  /** A literal predicate on `key` that holds for every value some live
+    * file's zone of `key` can contain — [[candidateFilesByKeyZone]]'s
+    * interval test, evaluated per key with no Spark job (overlapping
+    * zones merge; past 64 disjoint intervals, one covering interval) —
+    * or None when zones cannot exclude anything: a file without a
+    * zone, or a zone kind other than `str` on a string key or `num` on
+    * a numeric one. */
+  private def zoneKeyFilter(spark: SparkSession, tableDir: String,
+      root: Root, key: String, keyType: DataType)
+      : Option[org.apache.spark.sql.Column] = {
+    val zones = root.chunks.flatMap { c =>
+      val ce = chunkEntry(spark, tableDir, c.name)
+      ce.files.map(f => ce.stats.get((key, f)))
+    }
+    if (zones.isEmpty || zones.exists(_.isEmpty)) return None
+    def merged[T](iv: Seq[(T, T)], cmp: (T, T) => Int): Seq[(T, T)] = {
+      val out = iv.sortWith((a, b) => cmp(a._1, b._1) < 0)
+        .foldLeft(List.empty[(T, T)]) {
+          case ((lo, hi) :: rest, (l, h)) if cmp(l, hi) <= 0 =>
+            (lo, if (cmp(h, hi) > 0) h else hi) :: rest
+          case (acc, z) => z :: acc
+        }.reverse
+      if (out.size <= 64) out
+      else Seq((out.head._1, out.map(_._2).reduce((a, b) =>
+        if (cmp(a, b) >= 0) a else b)))
+    }
+    val zs = zones.flatten
+    val k = col(key)
+    keyType match {
+      case StringType if zs.forall(_.kind == "str") =>
+        Some(merged[String](zs.map(z => (z.min, z.max)), ZoneStat.cmpCp)
+          .map { case (lo, hi) =>
+            // a max at the U+FFFF sentinel bounds nothing above it
+            if (hi.startsWith("\uffff")) k >= lit(lo)
+            else k >= lit(lo) && k <= lit(hi)
+          }.reduce(_ || _))
+      case _: org.apache.spark.sql.types.NumericType
+          if zs.forall(_.kind == "num") =>
+        val kd = k.cast("double")
+        Some(merged[Double](zs.map(z => (z.min.toDouble, z.max.toDouble)),
+            (a, b) => java.lang.Double.compare(a, b))
+          .map { case (lo, hi) => kd >= lit(lo) && kd <= lit(hi) }
+          .reduce(_ || _))
+      case _ => None
+    }
   }
 
   /** REPLICATION THROUGH MAINTENANCE — the composition the CDC
@@ -3890,14 +4181,143 @@ object SnapshotTable {
       readVersion = Some(v), rebalance = false)
   }
 
-  /** Per-partition MERGE-ON-READ debt at `version`, metadata-only: the
-    * live delete rows (equality + positional) whose sequence reaches
-    * any file of the partition, next to the partition's pre-delete row
-    * count (an upper bound while deletes are live; None when any file
-    * predates row-count recording). Every reachable delete's rows
-    * count against every partition it can reach (equality deletes are
-    * key-scoped, not partition-scoped — conservative is the only
-    * honest read of the metadata). The read-amplification signal
+  /** What the live deletes of `root` really doom, counted against RAW
+    * file content (the delete-aware read would hide exactly the rows
+    * in question): per live file, the rows some delete hides, and per
+    * ref, the files holding a row it dooms (empty: it matches nothing).
+    * Positional refs count their own positions in live
+    * files, read from the sidecars on the driver. Equality refs take
+    * one zone probe per key column over their union, on the driver
+    * ([[zoneMayHold]]), then ONE semi-join job over the candidate
+    * files tags each row with the refs that doom it under the sequence
+    * rule, so a row several refs doom counts once. (The Bloom probe is
+    * not consulted here: it costs several Spark jobs per call, more
+    * than the candidate scan it would narrow on tables this size.) A row doomed by refs of both kinds (or of two
+    * key columns) counts once per kind — the count errs high, never
+    * low. */
+  private final case class MorDebt(doomedByFile: Map[String, Long],
+      refFiles: Map[String, Set[String]])
+
+  private def measureMorDebt(spark: SparkSession, tableDir: String,
+      root: Root): MorDebt = {
+    val seqOf = fileSeqs(spark, tableDir, root)
+    val doomed = scala.collection.mutable.Map.empty[String, Long]
+    val refFiles = scala.collection.mutable.Map.empty[String, Set[String]]
+    def record(rel: String, n: Long, refs: Seq[String]): Unit = {
+      doomed(rel) = doomed.getOrElse(rel, 0L) + n
+      refs.foreach(r => refFiles(r) = refFiles.getOrElse(r, Set.empty) + rel)
+    }
+    root.posDeletes.foreach { d =>
+      val perRel: Seq[(String, Long)] =
+        if (d.rows <= LiteralDeleteRows)
+          sidecar(spark, tableDir, d.name, d.rows, Some(PosSchema)).rows.get
+            .toSeq.groupBy(_.getUTF8String(0).toString)
+            .map { case (rel, rs) => rel -> rs.size.toLong }.toSeq
+        else
+          posFrame(spark, tableDir, Seq(d)).groupBy(col("__rel")).count()
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+      perRel.foreach { case (rel, n) =>
+        if (seqOf.get(rel).exists(_ <= d.seq)) record(rel, n, Seq(d.name))
+      }
+    }
+    val tagged = root.deletes.groupBy(_.keyCol).toSeq.flatMap {
+      case (kc, ds) =>
+        val maxSeq = ds.map(_.seq).max
+        // the zone probe, on the driver against the literal key set: no
+        // Spark job (a set too large for literals, or a column the root
+        // does not type, scans every file in sequence scope)
+        val mayHold = rootType(root, kc)
+          .flatMap(t => literalKeys(spark, tableDir, ds, t)
+            .map(zoneMayHold(_, t)))
+          .getOrElse((_: Option[ZoneStat]) => true)
+        val zoneOf = root.chunks.flatMap { c =>
+          chunkEntry(spark, tableDir, c.name).stats
+            .collect { case ((c2, f), z) if c2 == kc => f -> z }
+        }.toMap
+        val cands = seqOf.keys.toSeq.sorted
+          .filter(f => seqOf(f) <= maxSeq && mayHold(zoneOf.get(f)))
+        if (cands.isEmpty) Nil
+        else {
+          // one scan of every candidate; each row is tagged with every
+          // ref whose keys hold its key, and the sequence rule drops the
+          // refs that cannot reach the row's file on the driver below
+          val raw = readFileGroupsRaw(spark, tableDir, root, cands,
+            withPos = true)
+          val dt = raw.schema.fields.find(_.name.equalsIgnoreCase(kc))
+            .map(_.dataType).getOrElse(StringType)
+          val (small, big) = ds.partition(_.rows <= LiteralDeleteRows)
+          val bySet =
+            if (small.isEmpty) Nil
+            else Seq(raw.select(col("__rel"), array_compact(array(
+                small.map(d => when(inSet(col(kc),
+                    literalKeys(spark, tableDir, Seq(d), dt).get),
+                  lit(d.name))): _*)).as("__refs"))
+              .filter(size(col("__refs")) > 0))
+          bySet ++ big.map(d => raw
+            .join(keyFrame(spark, tableDir, Seq(d), kc, Some(dt)), Seq(kc),
+              "leftsemi")
+            .select(col("__rel"), array(lit(d.name)).as("__refs")))
+        }
+    }
+    val eqSeq = root.deletes.map(d => d.name -> d.seq).toMap
+    tagged.reduceOption(_.unionByName(_)).foreach(
+      _.groupBy(col("__rel"), col("__refs")).count().collect().foreach { r =>
+        val rel = r.getString(0)
+        val reach = r.getSeq[String](1).filter(eqSeq(_) >= seqOf(rel))
+        if (reach.nonEmpty) record(rel, r.getLong(2), reach)
+      })
+    MorDebt(doomed.toMap, refFiles.toMap)
+  }
+
+  /** Whether a file whose zone of a column is `zone` may hold one of
+    * `keys` (Catalyst values of `dt`) — [[candidateFilesByKeyZone]]'s
+    * interval test, by binary search over the sorted keys. Lossless: a
+    * missing zone, or a zone kind other than `str` for string keys or
+    * `num` for numeric ones, may hold anything. */
+  private def zoneMayHold(keys: Set[Any], dt: DataType)
+      : Option[ZoneStat] => Boolean = {
+    def firstAtLeast[T](xs: Array[T], lo: T, cmp: (T, T) => Int): Int = {
+      var a = 0; var b = xs.length
+      while (a < b) {
+        val m = (a + b) >>> 1
+        if (cmp(xs(m), lo) < 0) a = m + 1 else b = m
+      }
+      a
+    }
+    dt match {
+      case StringType =>
+        val xs = keys.iterator.map(_.asInstanceOf[UTF8String]).toArray.sorted
+        (zone: Option[ZoneStat]) => zone match {
+          case Some(z) if z.kind == "str" =>
+            val i = firstAtLeast[UTF8String](xs, UTF8String.fromString(z.min),
+              _ compareTo _)
+            // a max at the U+FFFF sentinel bounds nothing above it
+            i < xs.length && (z.max.startsWith("\uffff") ||
+              xs(i).compareTo(UTF8String.fromString(z.max)) <= 0)
+          case _ => true
+        }
+      case _: org.apache.spark.sql.types.NumericType =>
+        val xs = keys.iterator.map {
+          case d: org.apache.spark.sql.types.Decimal => d.toDouble
+          case n: java.lang.Number => n.doubleValue
+        }.toArray.sorted
+        (zone: Option[ZoneStat]) => zone match {
+          case Some(z) if z.kind == "num" =>
+            val i = firstAtLeast[Double](xs, z.min.toDouble,
+              java.lang.Double.compare)
+            i < xs.length && xs(i) <= z.max.toDouble
+          case _ => true
+        }
+      case _ => _ => true
+    }
+  }
+
+  /** Per-partition MERGE-ON-READ debt at `version`: the rows live
+    * deletes really hide in the partition ([[measureMorDebt]] — each
+    * equality ref is matched against the partition's candidate files,
+    * not charged in full to every partition it could reach), next to
+    * the partition's pre-delete row count (None when any file predates
+    * row-count recording). The read-amplification signal
     * [[autoCompactMor]] triggers on. */
   def morDebtByPartition(spark: SparkSession, tableDir: String,
       version: Option[Int] = None)
@@ -3905,54 +4325,97 @@ object SnapshotTable {
     val v = version.getOrElse(latestVersion(spark, tableDir))
     require(v > 0, s"no snapshot at $tableDir")
     val root = readRoot(spark, tableDir, v)
-    val refSeqs = root.deletes.map(d => (d.seq, d.rows)) ++
-      root.posDeletes.map(d => (d.seq, d.rows))
+    val debt =
+      if (root.deletes.isEmpty && root.posDeletes.isEmpty) Map.empty[String, Long]
+      else measureMorDebt(spark, tableDir, root).doomedByFile
     val perFile = root.chunks.flatMap { c =>
       val ce = chunkEntry(spark, tableDir, c.name)
-      ce.files.map(f => (f, ce.seqs.getOrElse(f, 0L), ce.rows.get(f)))
+      ce.files.map(f => (f, ce.rows.get(f)))
     }
     perFile.groupBy(e => partitionOf(e._1).getOrElse((None, None)))
       .view.mapValues { es =>
-        val minSeq = es.map(_._2).min
-        val debt = refSeqs.collect { case (s, n) if s >= minSeq => n }.sum
         val rows =
-          if (es.exists(_._3.isEmpty)) None
-          else Some(es.flatMap(_._3).sum)
-        (debt, rows)
+          if (es.exists(_._2.isEmpty)) None
+          else Some(es.flatMap(_._2).sum)
+        (es.map(e => debt.getOrElse(e._1, 0L)).sum, rows)
       }.toMap
   }
 
   /** MoR-debt maintenance: compact every partition whose live delete
     * rows exceed `maxDebtRatio` of its (pre-delete) row count — the
     * read-amplification trigger that keeps a sustained
-    * [[mergeMor]]/[[deleteKeysMor]] stream from accreting one
-    * anti-join per read forever without anyone calling
-    * [[compactPartitions]] by hand (round-14 VERDICT #5). The
-    * compaction read applies the deletes, so the rewritten partitions'
-    * new files outrun every folded ref's sequence and the commit
-    * protocol auto-drops refs nothing can reach anymore. Victim
-    * selection is metadata-only; a partition with an unknown row count
-    * but nonzero debt is conservatively compacted. Returns the
-    * compacted partitions (empty = debt within budget, no commit). */
+    * [[mergeMor]]/[[deleteKeysMor]] stream from accreting delete refs
+    * forever without anyone calling [[compactPartitions]] by hand
+    * (round-14 VERDICT #5). Debt is what the deletes really doom per
+    * partition ([[morDebtByPartition]]), so a key delete spread thin
+    * over many partitions folds none of them until one crosses the
+    * ratio. In the same pass, refs none of whose matched files is
+    * still live after the fold, or that match nothing, are dropped
+    * ([[pruneDanglingDeletes]]' proof), so folding every reached
+    * partition leaves no ref live. A partition with an unknown row
+    * count but nonzero debt is conservatively compacted. Returns the
+    * compacted partitions (empty = debt within budget). */
   def autoCompactMor(spark: SparkSession, tableDir: String,
       maxDebtRatio: Double = 0.2, targetFileCount: Int = 1)
-      : Seq[(Option[Int], Option[Int])] = {
+      : Seq[(Option[Int], Option[Int])] =
+    foldMorDebt(spark, tableDir, maxDebtRatio, targetFileCount)._1
+
+  /** [[autoCompactMor]]: (the compacted partitions, the refs proven
+    * dead and dropped). */
+  private def foldMorDebt(spark: SparkSession, tableDir: String,
+      maxDebtRatio: Double, targetFileCount: Int)
+      : (Seq[(Option[Int], Option[Int])], Seq[String]) = {
     val v = latestVersion(spark, tableDir)
     require(v > 0, s"no snapshot at $tableDir")
     val root = readRoot(spark, tableDir, v)
-    if (root.deletes.isEmpty && root.posDeletes.isEmpty) return Nil
+    if (root.deletes.isEmpty && root.posDeletes.isEmpty) return (Nil, Nil)
+    val debt = measureMorDebt(spark, tableDir, root)
+    val rowsOf = root.chunks.flatMap { c =>
+      val ce = chunkEntry(spark, tableDir, c.name)
+      ce.files.map(f => (f, ce.rows.get(f)))
+    }.groupBy(e => partitionOf(e._1).getOrElse((None, None)))
     // .toSeq BEFORE collect: collecting the (year, month) tuple keys
     // straight off the Map would re-build a Map[year, month] and
     // silently dedupe victims to ONE PER YEAR (found by q_maintain:
     // 83 indebted partitions, 8 "victims")
-    val victims = morDebtByPartition(spark, tableDir, Some(v)).toSeq
-      .collect {
-        case (p, (debt, rowsOpt)) if debt > 0 &&
-            rowsOpt.forall(r => debt > maxDebtRatio * r) => p
+    val victims = rowsOf.toSeq.collect {
+      case (p, es) if {
+        val d = es.map(e => debt.doomedByFile.getOrElse(e._1, 0L)).sum
+        d > 0 && (es.exists(_._2.isEmpty) ||
+          d > maxDebtRatio * es.flatMap(_._2).sum)
+      } => p
+    }
+    val live =
+      if (victims.isEmpty) debt.refFiles.values.flatten.toSet
+      else {
+        compactPartitions(spark, tableDir, victims, targetFileCount)
+        resolveFiles(spark, tableDir,
+          readRoot(spark, tableDir, latestVersion(spark, tableDir))).toSet
       }
-    if (victims.nonEmpty)
-      compactPartitions(spark, tableDir, victims, targetFileCount)
-    victims
+    // files are immutable and new ones always carry a higher sequence
+    // than any live ref, so a ref none of whose matched files is still
+    // live matches nothing at any later version
+    val dead = (root.deletes.map(_.name) ++ root.posDeletes.map(_.name))
+      .filterNot(n => debt.refFiles.getOrElse(n, Set.empty).exists(live))
+    dropDeleteRefs(spark, tableDir, dead.toSet)
+    (victims, dead.sorted)
+  }
+
+  /** One metadata-only commit dropping the named refs still live (none
+    * live: no commit). */
+  private def dropDeleteRefs(spark: SparkSession, tableDir: String,
+      names: Set[String]): Unit = {
+    val now = readRoot(spark, tableDir, latestVersion(spark, tableDir))
+    if ((now.deletes.map(_.name) ++ now.posDeletes.map(_.name))
+        .exists(names.contains))
+      commitGated(spark, tableDir, "prune-deletes",
+        deletesOf = (p, _) => p.map(_.deletes).getOrElse(Nil)
+          .filterNot(d => names.contains(d.name)),
+        posDeletesOf = (p, _) => p.map(_.posDeletes).getOrElse(Nil)
+          .filterNot(d => names.contains(d.name))) { parent =>
+        val r = readRoot(spark, tableDir, parent)
+        (r.chunks, r.schemaJson)
+      }
   }
 
   /** Fold the live POSITIONAL-delete sidecars into ONE (round-14
@@ -3979,10 +4442,7 @@ object SnapshotTable {
     val live = resolveFiles(spark, tableDir, root)
     import spark.implicits._
     val liveDf = broadcast(live.toDF("__rel"))
-    val merged = root.posDeletes.map(d => spark.read
-        .parquet(s"$tableDir/_snapshots/${d.name}")
-        .select(col("__rel"), col("__ri")))
-      .reduce(_.unionByName(_)).distinct()
+    val merged = posFrame(spark, tableDir, root.posDeletes)
       .join(liveDf, Seq("__rel"), "leftsemi")
     val name = s"deletes/del_${java.util.UUID.randomUUID()}"
     val delDir = s"$tableDir/_snapshots/$name"
@@ -4034,60 +4494,28 @@ object SnapshotTable {
 
   /** Drop DANGLING delete refs (Iceberg's remove-dangling-deletes
     * analog): a ref whose doomed rows were all rewritten away (e.g. by
-    * [[autoCompactMor]]) stays CARRIED as long as ANY live file keeps a
-    * data sequence at or below its own — the seq-based auto-drop can't
-    * see that the ref matches nothing in those files. This pass proves
-    * it: per equality ref, the zone+Bloom candidate files in sequence
-    * scope are verify-read (ONLY them) against the ref's key set; per
-    * positional ref, liveness of its addressed files is checked from
-    * metadata alone. Refs proven dead are dropped in ONE metadata-only
-    * commit. Sound under races: new files always carry a HIGHER
-    * sequence than any live ref, so a ref dead at this version is dead
-    * at every later one — dropping by name composes with any
-    * concurrent commit. Returns the dropped ref names (no commit when
-    * none die). */
+    * [[compactPartitions]]) stays CARRIED as long as ANY live file keeps
+    * a data sequence at or below its own — the seq-based auto-drop
+    * can't see that the ref matches nothing in those files. This pass
+    * proves it with [[measureMorDebt]]: equality refs are verify-read
+    * against their zone+Bloom candidate files in sequence scope,
+    * positional refs checked against the live files they address. Refs
+    * proven dead are dropped in ONE metadata-only commit. Sound under
+    * races: new files always carry a HIGHER sequence than any live ref,
+    * so a ref dead at this version is dead at every later one —
+    * dropping by name composes with any concurrent commit. Returns the
+    * dropped ref names (no commit when none die). */
   def pruneDanglingDeletes(spark: SparkSession, tableDir: String)
       : Seq[String] = {
     val v = latestVersion(spark, tableDir)
     require(v > 0, s"no snapshot at $tableDir")
     val root = readRoot(spark, tableDir, v)
     if (root.deletes.isEmpty && root.posDeletes.isEmpty) return Nil
-    val seqOf: Map[String, Long] = root.chunks.flatMap { c =>
-      val ce = chunkEntry(spark, tableDir, c.name)
-      ce.files.map(f => f -> ce.seqs.getOrElse(f, 0L))
-    }.toMap
-    val deadEq = root.deletes.filter { d =>
-      val keys = spark.read.parquet(s"$tableDir/_snapshots/${d.name}")
-        .select(col(d.keyCol))
-      val cands = candidateFilesForKeys(spark, tableDir, keys,
-        d.keyCol, v).filter(f => seqOf.getOrElse(f, 0L) <= d.seq)
-      // verify against RAW content: the delete-aware read would hide
-      // exactly the rows this ref dooms and make every ref look dead.
-      // A raw match another ref also dooms keeps this one alive —
-      // conservative, never resurrecting
-      cands.isEmpty || {
-        val rhs = if (d.rows <= 1000000L) broadcast(keys.distinct())
-          else keys.distinct()
-        readFileGroupsRaw(spark, tableDir, root, cands)
-          .join(rhs, Seq(d.keyCol), "leftsemi").isEmpty
-      }
-    }.map(_.name).toSet
-    val liveFiles = seqOf.keySet
-    val deadPos = root.posDeletes.filter { d =>
-      spark.read.parquet(s"$tableDir/_snapshots/${d.name}")
-        .select(col("__rel")).distinct().collect()
-        .forall(r => !liveFiles.contains(r.getString(0)))
-    }.map(_.name).toSet
-    if (deadEq.isEmpty && deadPos.isEmpty) return Nil
-    commitGated(spark, tableDir, "prune-deletes",
-      deletesOf = (p, _) => p.map(_.deletes).getOrElse(Nil)
-        .filterNot(d => deadEq.contains(d.name)),
-      posDeletesOf = (p, _) => p.map(_.posDeletes).getOrElse(Nil)
-        .filterNot(d => deadPos.contains(d.name))) { parent =>
-      val r = readRoot(spark, tableDir, parent)
-      (r.chunks, r.schemaJson)
-    }
-    (deadEq ++ deadPos).toSeq.sorted
+    val matched = measureMorDebt(spark, tableDir, root).refFiles.keySet
+    val dead = (root.deletes.map(_.name) ++ root.posDeletes.map(_.name))
+      .filterNot(matched.contains)
+    dropDeleteRefs(spark, tableDir, dead.toSet)
+    dead.sorted
   }
 
   /** What one [[maintain]] pass did — each count 0/false when that
@@ -4104,12 +4532,13 @@ object SnapshotTable {
   /** ONE maintenance entry point a scheduler can run per table — the
     * OPTIMIZE analog, composing every policy this layer has in
     * dependency order: (1) fold partitions whose merge-on-read delete
-    * debt crossed `morDebtRatio` (refs auto-drop), (2) drop refs the
-    * fold left dangling ([[pruneDanglingDeletes]] — proven matchless),
-    * (3) consolidate positional sidecars into one, (4) compact
-    * partitions holding more than `maxFilesPerPartition` small files,
-    * (5) rewrite the manifest level when the root references more than
-    * `maxChunks` chunks, (6) refresh the Bloom index LAST so the files
+    * debt crossed `morDebtRatio` and, in the same pass, (2) drop the
+    * refs whose every match lay in a folded file or that match nothing
+    * ([[autoCompactMor]]), (3) consolidate positional sidecars
+    * into one, (4) compact partitions holding more than
+    * `maxFilesPerPartition` small files, (5) rewrite the manifest
+    * level when the root references more than `maxChunks` chunks, (6)
+    * refresh the Bloom index LAST so the files
     * the earlier rewrites produced are covered, (7) optionally expire
     * snapshots older than
     * `expireOlderThanMs` (respecting named-ref pins). Content is
@@ -4122,8 +4551,7 @@ object SnapshotTable {
       maxFilesPerPartition: Int = 16,
       maxChunks: Int = 64, targetChunks: Int = 8,
       expireOlderThanMs: Option[Long] = None): MaintenanceReport = {
-    val morParts = autoCompactMor(spark, tableDir, morDebtRatio)
-    val pruned = pruneDanglingDeletes(spark, tableDir)
+    val (morParts, pruned) = foldMorDebt(spark, tableDir, morDebtRatio, 1)
     val consolidated = consolidatePosDeletes(spark, tableDir).nonEmpty
     val fileParts = autoCompact(spark, tableDir, maxFilesPerPartition)
     val root = readRoot(spark, tableDir,

@@ -6,7 +6,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -203,4 +207,28 @@ object GraftSparkInternals { // public: graft.sources and operators call it
       length: Long): PartitionedFile =
     PartitionedFile(partitionValues, SparkPath.fromPathString(absolutePath),
       0L, length, Array.empty, 0L, length, Map.empty)
+
+  /** One parquet file's schema from its footer alone: a driver-side
+    * read of a few KB, never Spark's schema-inference job. */
+  def parquetFileSchema(spark: SparkSession, status: FileStatus)
+      : StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
+      spark.sparkContext.hadoopConfiguration))
+    try new ParquetToSparkSchemaConverter(SQLConf.get)
+      .convert(reader.getFooter.getFileMetaData.getSchema)
+    finally reader.close()
+  }
+
+  /** Every row of the metadata-sized parquet files `statuses`, decoded
+    * on the driver by [[parquetReaderFunc]] and copied out of the
+    * reader's reused buffer: the values in Catalyst's internal form,
+    * with no Spark job. */
+  def parquetRowsOnDriver(spark: SparkSession, statuses: Seq[FileStatus],
+      schema: StructType): Array[InternalRow] =
+    if (statuses.isEmpty) Array.empty
+    else {
+      val read = parquetReaderFunc(spark, schema, new StructType(), schema)
+      statuses.iterator.flatMap(st => read(partitionedFile(InternalRow.empty,
+        st.getPath.toString, st.getLen)).map(_.copy())).toArray
+    }
 }

@@ -200,4 +200,46 @@ class MaintenanceSpec extends SparkSpec {
     assert(read(spark, dir).select("claim_id").as[String].collect()
       .sorted.toSeq == Seq("K-B", "Z-C"), "dropping must not resurrect")
   }
+
+  test("a 40-key mergeMor over 20 of 24 partitions folds none at ratio 0.2; at 0.0 exactly the reached ones fold and no ref stays live") {
+    val dir = s"$base/thin_debt"
+    wipe(dir)
+    // 24 month partitions of 20 claims, one file each
+    val parts = (0 until 24).map(m => (2000 + m / 12, m % 12 + 1))
+    append(spark, dir, parts.flatMap { case (y, m) =>
+        (0 until 20).map(i => (f"K$y-$m%02d-$i%02d", "b0", i * 1.0, y, m))
+      }.toDF("claim_id", "batch_id", "claim_amount", "service_year",
+        "service_month").repartition(col("service_year"),
+        col("service_month")),
+      statsColumns = Seq("claim_id"))
+    // 40 upserts, two in each of the first 20 partitions, updated in place
+    val reached = parts.take(20)
+    val upd = reached.flatMap { case (y, m) =>
+      Seq(3, 11).map(i => (f"K$y-$m%02d-$i%02d", "b1", 500.0 + i, y, m))
+    }
+    mergeMor(spark, dir, upd.toDF("claim_id", "batch_id", "claim_amount",
+      "service_year", "service_month"))
+    val model = parts.flatMap { case (y, m) =>
+      (0 until 20).map(i => f"K$y-$m%02d-$i%02d" -> "b0")
+    }.toMap ++ upd.map(u => u._1 -> "b1")
+    def content = read(spark, dir).select("claim_id", "batch_id")
+      .as[(String, String)].collect().toMap
+    // each reached partition holds 2 doomed rows of 22: debt 0.09 < 0.2
+    val debt = morDebtByPartition(spark, dir)
+    assert(debt.size == 24)
+    reached.foreach(p =>
+      assert(debt((Some(p._1), Some(p._2)))._1 == 2, s"$p: ${debt(
+        (Some(p._1), Some(p._2)))}"))
+    parts.drop(20).foreach(p =>
+      assert(debt((Some(p._1), Some(p._2)))._1 == 0))
+    assert(autoCompactMor(spark, dir, 0.2).isEmpty,
+      "thin debt must not fold the table")
+    assert(liveDeletes(spark, dir)._1.size == 1)
+    assert(content == model)
+    // ratio 0: every partition holding a doomed row folds, no other
+    val folded = autoCompactMor(spark, dir, 0.0)
+    assert(folded.toSet == reached.map(p => (Some(p._1), Some(p._2))).toSet)
+    assert(liveDeletes(spark, dir) == ((Nil, Nil)))
+    assert(content == model)
+  }
 }
