@@ -102,8 +102,8 @@ object SnapshotQueries {
   def dataSkippingE2e(spark: SparkSession, sfDir: String): DataFrame = {
     Engine.configure(spark)
     val tableDir = amountClusteredTable(spark, sfDir)
-    val (df, _, _) =
-      scanSkipping(spark, tableDir, "claim_amount", 1000.0, 20000.0)
+    val (df, _, _) = planScan(spark, tableDir,
+      zones = Seq(ZonePredicate.num("claim_amount", 1000.0, 20000.0)))
     df.filter(col("claim_amount") >= 1000.0 &&
         col("claim_amount") <= 20000.0)
       .agg(count(lit(1)).as("n_claims"),
@@ -117,7 +117,7 @@ object SnapshotQueries {
     * from the predicate's own conjuncts ([[SnapshotTable
     * .pruningHintsOf]]), and the scan hands the parquet reader only
     * the intersecting files (asserted: fewer files than the table
-    * holds, via the same derived hints through planScan). The DuckDB
+    * holds, via [[SnapshotTable.readWherePlanned]]). The DuckDB
     * oracle computes the banded rollup over the FULL table — equality
     * proves the automatic derivation never skipped a qualifying
     * file. */
@@ -126,8 +126,7 @@ object SnapshotQueries {
     val tableDir = amountClusteredTable(spark, sfDir)
     val pred = col("claim_amount") >= 50000.0 &&
       col("claim_amount") <= 120000.0
-    val (parts, zones) = pruningHintsOf(pred)
-    val (_, total, kept) = planScan(spark, tableDir, parts, zones)
+    val (_, total, kept) = readWherePlanned(spark, tableDir, pred)
     require(kept < total,
       s"derived bounds must prune the scan ($kept of $total files)")
     readWhere(spark, tableDir, pred)
@@ -196,8 +195,8 @@ object SnapshotQueries {
   def dateSkippingE2e(spark: SparkSession, sfDir: String): DataFrame = {
     Engine.configure(spark)
     val tableDir = dateClusteredTable(spark, sfDir)
-    val (df, _, _) = scanSkippingStr(spark, tableDir, "service_date",
-      "1996-01-01", "1996-12-31")
+    val (df, _, _) = planScan(spark, tableDir, zones = Seq(
+      ZonePredicate.str("service_date", "1996-01-01", "1996-12-31")))
     df.filter(col("service_date") >= lit("1996-01-01").cast("date") &&
         col("service_date") <= lit("1996-12-31").cast("date"))
       .groupBy(col("service_month"))
@@ -211,7 +210,7 @@ object SnapshotQueries {
     * as an oracle-checked query — ONE [[SnapshotTable.planScan]] call
     * composes partition pruning (1996 Q2 months, resolved from the
     * root's chunk ranges + file prefixes) with DATE zone pruning, where
-    * previously readPartitions and scanSkipping composed manually. The
+    * previously a partition read and a zone scan composed manually. The
     * DuckDB oracle aggregates the FULL silver under the same row
     * predicate — equality proves the one-call plan reads every
     * qualifying row (SnapshotSpec pins its file set == the manual

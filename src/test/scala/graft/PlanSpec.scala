@@ -15,14 +15,7 @@ import graft.operators.{Checks, GoldViews, TextOps, VectorOps}
   * just the benchmark. */
 class PlanSpec extends SparkSpec {
 
-  private def planString(df: DataFrame): String = {
-    val p = df.queryExecution.executedPlan
-    val unwrapped = p match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan
-      case other => other
-    }
-    unwrapped.toString
-  }
+  private def planString(df: DataFrame): String = QueryPass.planString(df)
 
   test("claimsSummary: ship-date filter is pushed to the parquet scan") {
     val plan = planString(GoldViews.claimsSummary(spark, sfDir))
@@ -139,9 +132,9 @@ class PlanSpec extends SparkSpec {
     // a CartesianProductExec means a non-broadcast cross join slipped in —
     // at scale that is |A|×|B| work with a full shuffle of both sides;
     // every intentional cross join in the library broadcasts a tiny side
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = planString(fn(spark, sfDir))
-      assert(!plan.contains("CartesianProduct"), s"$name: $plan")
+    QueryPass.outcomes(spark, sfDir).foreach { o =>
+      val plan = o.cartesianPlan.get
+      assert(plan.isEmpty, s"${o.name}: ${plan.mkString}")
     }
   }
 

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 class QueriesSpec extends SparkSpec {
 
   test("every registered query runs and returns rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      assert(n > 0, s"$name returned 0 rows")
+    QueryPass.outcomes(spark, sfDir).foreach { o =>
+      val n = o.rows.get
+      assert(n > 0, s"${o.name} returned 0 rows")
     }
   }
 

@@ -218,10 +218,11 @@ class Round15FixesSpec extends SparkSpec {
     val dt = zones.find(_.column == "service_date").get
     assert(!dt.matches(ZoneStat("date", "1996-01-01", "1996-03-31")))
     assert(dt.matches(ZoneStat("date", "1996-03-01", "1996-05-31")))
-    // year-only equality enumerates the 12 months
+    // year-only equality enumerates the 12 months and the null month
     val (pYear, _) = SnapshotTable.pruningHintsOf(
       col("service_year") === 1997)
-    assert(pYear.exists(_.size == 12))
+    assert(pYear.exists(_.size == 13))
+    assert(pYear.exists(_.contains((Some(1997), None))))
     // non-derivable shapes contribute NOTHING (ORs, casts of columns)
     val (pNone, zNone) = SnapshotTable.pruningHintsOf(
       col("a") > 1.0 || col("b") < 2.0)

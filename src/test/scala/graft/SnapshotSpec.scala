@@ -107,7 +107,8 @@ class SnapshotSpec extends SparkSpec {
     wipe(s"$base/skip")
     graft.operators.SnapshotQueries.buildClusteredSilver(spark, sfDir, dir)
     val (df, total, kept) =
-      SnapshotTable.scanSkipping(spark, dir, "claim_amount", 1000.0, 20000.0)
+      SnapshotTable.planScan(spark, dir, zones = Seq(
+        SnapshotTable.ZonePredicate.num("claim_amount", 1000.0, 20000.0)))
     assert(total > 0 && kept > 0)
     // clustering (8 range groups) must let the narrow band skip the
     // bulk of the files
@@ -118,7 +119,8 @@ class SnapshotSpec extends SparkSpec {
     assert(viaSkip == viaFull && viaFull > 0)
     // a disjoint band above the data's range reads zero files
     val (_, _, none) =
-      SnapshotTable.scanSkipping(spark, dir, "claim_amount", 1e9, 2e9)
+      SnapshotTable.planScan(spark, dir, zones = Seq(
+        SnapshotTable.ZonePredicate.num("claim_amount", 1e9, 2e9)))
     assert(none == 0)
     // every live file carries a stats row (claim_amount is never null
     // post-cleanse), so nothing rides the always-scan fallback here
@@ -132,8 +134,9 @@ class SnapshotSpec extends SparkSpec {
     val dir = s"$base/skipdate/silver"
     wipe(s"$base/skipdate")
     graft.operators.SnapshotQueries.buildDateClusteredSilver(spark, sfDir, dir)
-    val (df, total, kept) = SnapshotTable.scanSkippingStr(spark, dir,
-      "service_date", "1996-01-01", "1996-12-31")
+    val (df, total, kept) = SnapshotTable.planScan(spark, dir, zones = Seq(
+      SnapshotTable.ZonePredicate.str("service_date", "1996-01-01",
+        "1996-12-31")))
     assert(total > 0 && kept > 0)
     assert(kept * 2 <= total, s"kept=$kept of $total — date zones useless")
     val p = col("service_date") >= lit("1996-01-01").cast("date") &&
@@ -148,14 +151,16 @@ class SnapshotSpec extends SparkSpec {
     val stats = SnapshotTable.readStats(spark, dir, v)
     val statless = SnapshotTable.manifest(spark, dir, v).files
       .count(f => !stats.contains(("service_date", f)))
-    val (farDf, _, far) = SnapshotTable.scanSkippingStr(spark, dir,
-      "service_date", "2050-01-01", "2050-12-31")
+    val (farDf, _, far) = SnapshotTable.planScan(spark, dir, zones = Seq(
+      SnapshotTable.ZonePredicate.str("service_date", "2050-01-01",
+        "2050-12-31")))
     assert(far == statless)
     assert(farDf.filter(col("service_date").isNotNull).isEmpty)
     // a numeric probe against a date-kind zone must fall back to
     // always-read (kind mismatch is never allowed to skip)
     val (_, t2, k2) =
-      SnapshotTable.scanSkipping(spark, dir, "service_date", 0.0, 1.0)
+      SnapshotTable.planScan(spark, dir, zones = Seq(
+        SnapshotTable.ZonePredicate.num("service_date", 0.0, 1.0)))
     assert(k2 == t2)
   }
 
@@ -170,7 +175,8 @@ class SnapshotSpec extends SparkSpec {
     assert(s2.nonEmpty)
     // month-1 files still skippable, month-2 files always read
     val (_, total, kept) =
-      SnapshotTable.scanSkipping(spark, dir, "claim_amount", 100.0, 200.0)
+      SnapshotTable.planScan(spark, dir, zones = Seq(
+        SnapshotTable.ZonePredicate.num("claim_amount", 100.0, 200.0)))
     val m2Files = SnapshotTable.manifest(spark, dir, 2).files
       .count(_.startsWith("service_year=2000/service_month=2/"))
     assert(kept == m2Files, s"kept=$kept expected unstatted-only=$m2Files")
