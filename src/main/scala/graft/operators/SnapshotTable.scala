@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType,
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 import graft.Engine
+import graft.expressions.{KeyDeleteSeq, PositionDeleteSeq}
 
 /** A writer's overwrite/merge/delete raced a commit that changed the
   * files it read from — the lost-update hazard table formats must
@@ -229,14 +230,22 @@ object SnapshotTable {
     * of every file (a distributed job, one task per file, above 32
     * paths). `files` must share one partition spec. With no `schema`
     * (legacy tables, freshly staged files) the schema is inferred from
-    * the files' footers, `mergeSchema` choosing all or one. */
+    * the files' footers, `mergeSchema` choosing all or one. After the
+    * partition columns come [[FileConstants]]: each file's data
+    * sequence (`seqOf`) and its table-relative path. */
   private def scanFiles(spark: SparkSession, tableDir: String,
       files: Seq[String], schema: Option[StructType],
-      mergeSchema: Boolean = false): DataFrame = {
+      mergeSchema: Boolean = false, seqOf: String => Long = _ => 0L)
+      : DataFrame = {
     val statusOf = fileStatuses(spark, tableDir, files)
     GraftSparkInternals.parquetScan(spark, tableDir, files.map(statusOf),
-      schema, Map("mergeSchema" -> mergeSchema.toString))
+      schema, Map("mergeSchema" -> mergeSchema.toString), FileConstants,
+      files.map(f => InternalRow(seqOf(f), UTF8String.fromString(f))))
   }
+
+  /** The per-file constant columns of every data-file scan. */
+  private val FileConstants = StructType(Seq(StructField("__seq", LongType),
+    StructField("__rel", StringType)))
 
   def latestVersion(spark: SparkSession, tableDir: String): Int = {
     val d = snapDir(tableDir)
@@ -1942,62 +1951,35 @@ object SnapshotTable {
     rel.split("/").init.toSeq.filter(_.contains("="))
       .map(_.takeWhile(_ != '='))
 
-  /** Read `files` spanning every partition spec that wrote them: one
-    * reader per spec group (Spark's partition discovery requires a
-    * consistent layout per read), unioned by name — a column one spec
-    * kept in the data and another moved into the path resolves either
-    * way, and a column a group lacks entirely reads as NULL. The
-    * root's schema types every group identically (partition columns
-    * present in an explicit schema take their values from the path).
-    *
-    * Live deletes apply HERE, at the one funnel every manifest-resolved
-    * read goes through (merge-on-read), under Iceberg's sequence rule: a
-    * row is gone when a live delete with `seq` ≥ its file's data
-    * sequence names it (a later re-insert of a key is untouched). Files
-    * are grouped by the deletes that reach them; each group filters its
-    * rows against those deletes' key sets and positions, and the groups
-    * union back. A delete set of at most [[LiteralDeleteRows]] rows is
-    * read once on the driver ([[sidecar]], cached by its immutable
-    * name) and enters the plan as an `InSet` literal, so applying it
-    * plans and runs no Spark job of its own: a read costs the job that
-    * runs it, however many refs are live. Larger sets anti-join their
-    * known-schema sidecar scan. A null key survives, as under an
-    * anti-join. */
+  /** Read `files` as `root` shows them: ONE scan per partition spec
+    * ([[readFileGroupsRaw]]), every row carrying its file's data
+    * sequence and table-relative path as per-file constants, and ONE
+    * delete filter over it. Live deletes apply HERE, at the one funnel
+    * every manifest-resolved read goes through (merge-on-read), under
+    * Iceberg's sequence rule, inside each file's own read: a row is gone
+    * when the highest sequence of a live equality delete naming its key
+    * ([[KeyDeleteSeq]]), or of a live positional delete naming its
+    * (path, row index) ([[PositionDeleteSeq]]), is at least its file's
+    * sequence, so a later re-insert of a key survives. The sets are read
+    * once on the driver ([[sidecar]], cached by immutable name) into one
+    * key → sequence map per key column and one per-file position map,
+    * so the filter plans and runs no Spark job of its own however many
+    * refs are live. A set of more than [[LiteralDeleteRows]] rows
+    * becomes one left-anti join on its sidecar scan, its condition
+    * carrying `file sequence <= delete sequence`. A null key survives.
+    * `keepPos` keeps each row's address columns (`__rel`, `__ri`). */
   private def readFileGroups(spark: SparkSession, tableDir: String,
       root: Root, files: Seq[String], mergeSchema: Boolean = false,
       keepPos: Boolean = false): DataFrame = {
-    if (root.deletes.isEmpty && root.posDeletes.isEmpty && !keepPos)
-      return readFileGroupsRaw(spark, tableDir, root, files, mergeSchema)
-    val seqOf = fileSeqs(spark, tableDir, root)
-    val frames = files.groupBy { f =>
-      val s = seqOf.getOrElse(f, 0L)
-      (root.deletes.filter(_.seq >= s), root.posDeletes.filter(_.seq >= s))
-    }.toSeq.map { case ((dels, pds), fs) =>
-      val positions = literalPositions(spark, tableDir, pds)
-      // only files a positional delete names need the (__rel, __ri)
-      // address columns; a set too large to hold names them all
-      val posFiles =
-        if (keepPos || (pds.nonEmpty && positions.isEmpty)) fs
-        else positions.map(p => fs.filter(p._1.contains)).getOrElse(Nil)
-      val posSet = posFiles.toSet
-      val plainFiles = fs.filterNot(posSet.contains)
-      val parts = Seq(plainFiles -> false, posFiles -> true).collect {
-        case (g, withPos) if g.nonEmpty =>
-          val raw = readFileGroupsRaw(spark, tableDir, root, g, mergeSchema,
-            withPos)
-          if (!withPos) raw
-          else {
-            val applied = withoutPositions(spark, tableDir, raw, pds,
-              positions)
-            if (keepPos) applied else applied.drop("__rel", "__ri")
-          }
-      }
-      val df = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      dels.groupBy(_.keyCol).foldLeft(df) { case (d, (kc, ds)) =>
-        withoutKeys(spark, tableDir, d, kc, ds)
-      }
-    }
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    val seqOf = fileSeqs(spark, tableDir, root).withDefaultValue(0L)
+    val minSeq = files.map(seqOf).minOption.getOrElse(0L)
+    val dels = root.deletes.filter(_.seq >= minSeq)
+    val pds = root.posDeletes.filter(_.seq >= minSeq)
+    val raw = readFileGroupsRaw(spark, tableDir, root, files, mergeSchema,
+      withPos = keepPos || pds.nonEmpty, seqOf)
+    val applied = withoutDeletes(spark, tableDir, raw, dels, pds)
+    if (keepPos) applied.drop("__seq")
+    else applied.drop("__seq", "__rel", "__ri")
   }
 
   /** Each live file's data sequence (0 = written before sequences). */
@@ -2008,31 +1990,25 @@ object SnapshotTable {
       ce.files.map(f => f -> ce.seqs.getOrElse(f, 0L))
     }.toMap
 
+  /** `files` as they sit on disk, deletes not applied: one scan per
+    * partition spec that wrote them (Spark's partition discovery needs
+    * one layout per scan), unioned by name — a column one spec kept in
+    * the data and another moved into the path resolves either way, and
+    * a column a group lacks reads as NULL. The root's schema types every
+    * group alike. Every row carries its file's per-file constants
+    * `__seq` (`seqOf`) and `__rel` (the manifest's table-relative path),
+    * and `withPos` its in-file row index `__ri`. */
   private def readFileGroupsRaw(spark: SparkSession, tableDir: String,
       root: Root, files: Seq[String], mergeSchema: Boolean = false,
-      withPos: Boolean = false): DataFrame = {
+      withPos: Boolean = false, seqOf: String => Long = _ => 0L)
+      : DataFrame = {
     val schema = root.schemaJson.map(j =>
       DataType.fromJson(j).asInstanceOf[StructType])
-    val groups = files.groupBy(specOf).values.toSeq
-    val frames = groups.map { g =>
-      val base = scanFiles(spark, tableDir, g, schema, mergeSchema)
-      if (!withPos) base
-      else {
-        // positional-delete addressing: (table-relative path, in-file
-        // row index). NOT the bare file name — a write job reuses its
-        // per-task part names across every partition dir it touches.
-        // The URI prefix is stripped in both file:/ renderings.
-        val qual = fsOf(spark, new Path(tableDir))
-          .makeQualified(new Path(tableDir)).toString
-        val pat = "^(" + Seq(qual + "/",
-            qual.replaceFirst("^file:/", "file:///") + "/")
-          .distinct.map(java.util.regex.Pattern.quote).mkString("|") + ")"
-        base.withColumn("__rel",
-            regexp_replace(col("_metadata.file_path"), pat, ""))
-          .withColumn("__ri", col("_metadata.row_index"))
-      }
-    }
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    files.groupBy(specOf).values.toSeq.map { g =>
+      val scan = scanFiles(spark, tableDir, g, schema, mergeSchema, seqOf)
+      if (withPos) scan.withColumn("__ri", col("_metadata.row_index"))
+      else scan
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   // ------------------------------------------------------------------
@@ -2118,21 +2094,25 @@ object SnapshotTable {
     root.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
 
-  /** The distinct non-null keys of equality sidecars `ds` as one column
-    * `kc`, cast to `dt` when given. */
+  /** The distinct non-null keys of equality sidecars `ds` as column
+    * `kc` (cast to `dt` when given), each with `__dseq`, the highest
+    * sequence of the refs naming it. */
   private def keyFrame(spark: SparkSession, tableDir: String,
       ds: Seq[DeleteRef], kc: String, dt: Option[DataType]): DataFrame = {
     val frames = ds.flatMap { d =>
       val sc = sidecar(spark, tableDir, d.name, d.rows)
       sc.schema.fields.find(_.name.equalsIgnoreCase(d.keyCol)).map { f =>
-        sidecarScan(spark, sc)
-          .select(dt.fold(col(f.name))(col(f.name).cast(_)).as(kc))
+        sidecarScan(spark, sc).select(
+          dt.fold(col(f.name))(col(f.name).cast(_)).as(kc),
+          lit(d.seq).as("__dseq"))
       }
     }
     frames.reduceOption(_.unionByName(_)).getOrElse(spark.createDataFrame(
         java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField(kc, dt.getOrElse(StringType))))))
-      .filter(col(kc).isNotNull).distinct()
+        StructType(Seq(StructField(kc, dt.getOrElse(StringType)),
+          StructField("__dseq", LongType)))))
+      .filter(col(kc).isNotNull).groupBy(col(kc))
+      .agg(max(col("__dseq")).as("__dseq"))
   }
 
   /** The distinct positions of positional sidecars `ds`. */
@@ -2144,13 +2124,13 @@ object SnapshotTable {
 
   /** The non-null keys of equality sidecars `ds` as Catalyst values of
     * `dt` (a key that does not cast can never equal a value of the
-    * column), or None when the sets hold more than [[LiteralDeleteRows]]
-    * rows. */
-  private def literalKeys(spark: SparkSession, tableDir: String,
-      ds: Seq[DeleteRef], dt: DataType): Option[Set[Any]] =
+    * column), each with the highest sequence of the refs naming it, or
+    * None when the sets hold more than [[LiteralDeleteRows]] rows. */
+  private def keySeqs(spark: SparkSession, tableDir: String,
+      ds: Seq[DeleteRef], dt: DataType): Option[Map[Any, Long]] =
     if (ds.map(_.rows).sum > LiteralDeleteRows) None
     else Some {
-      val out = scala.collection.mutable.HashSet.empty[Any]
+      val out = scala.collection.mutable.HashMap.empty[Any, Long]
       ds.foreach { d =>
         val sc = sidecar(spark, tableDir, d.name, d.rows)
         val i = sc.schema.fields.indexWhere(_.name.equalsIgnoreCase(d.keyCol))
@@ -2159,32 +2139,37 @@ object SnapshotTable {
           sc.rows.get.foreach { r =>
             if (!r.isNullAt(i)) {
               val k = castKey(r.get(i, src), src, dt)
-              if (k != null) out += k
+              if (k != null && out.getOrElse(k, -1L) < d.seq) out(k) = d.seq
             }
           }
         }
       }
-      out.toSet
+      out.toMap
     }
 
-  /** Positional sidecars `ds` as (the files they name, their positions
-    * rendered `path#index`), or None when there are none or they hold
-    * more than [[LiteralDeleteRows]] rows. */
-  private def literalPositions(spark: SparkSession, tableDir: String,
-      ds: Seq[PosDeleteRef]): Option[(Set[String], Set[Any])] =
-    if (ds.isEmpty || ds.map(_.rows).sum > LiteralDeleteRows) None
+  /** Positional sidecars `ds` as, per named file, its doomed row indices
+    * (sorted) with the highest sequence naming each, or None when they
+    * hold more than [[LiteralDeleteRows]] rows. */
+  private def positionSeqs(spark: SparkSession, tableDir: String,
+      ds: Seq[PosDeleteRef])
+      : Option[Map[UTF8String, (Array[Long], Array[Long])]] =
+    if (ds.map(_.rows).sum > LiteralDeleteRows) None
     else Some {
-      val rels = scala.collection.mutable.HashSet.empty[String]
-      val keys = scala.collection.mutable.HashSet.empty[Any]
+      val byFile = scala.collection.mutable.HashMap.empty[UTF8String,
+        scala.collection.mutable.LongMap[Long]]
       ds.foreach { d =>
         sidecar(spark, tableDir, d.name, d.rows, Some(PosSchema)).rows.get
           .foreach { r =>
-            val rel = r.getUTF8String(0)
-            rels += rel.toString
-            keys += UTF8String.fromString(s"$rel#${r.getLong(1)}")
+            val rows = byFile.getOrElseUpdate(r.getUTF8String(0).clone(),
+              scala.collection.mutable.LongMap.empty[Long])
+            if (rows.getOrElse(r.getLong(1), -1L) < d.seq)
+              rows(r.getLong(1)) = d.seq
           }
       }
-      (rels.toSet, keys.toSet)
+      byFile.view.mapValues { rows =>
+        val sorted = rows.toArray.sortBy(_._1)
+        (sorted.map(_._1), sorted.map(_._2))
+      }.toMap
     }
 
   private def inSet(c: org.apache.spark.sql.Column, values: Set[Any])
@@ -2193,36 +2178,51 @@ object SnapshotTable {
       org.apache.spark.sql.catalyst.expressions.InSet(
         GraftSqlBridge.toExpression(c), values))
 
-  /** `df` without the rows equality deletes `ds` name in column `kc`. */
-  private def withoutKeys(spark: SparkSession, tableDir: String,
-      df: DataFrame, kc: String, ds: Seq[DeleteRef]): DataFrame = {
-    val dt = df.schema.fields.find(_.name.equalsIgnoreCase(kc))
-      .map(_.dataType).getOrElse(throw new IllegalStateException(
-        s"delete key column $kc is not in the table at $tableDir"))
-    literalKeys(spark, tableDir, ds, dt) match {
-      case Some(keys) if keys.isEmpty => df
-      case Some(keys) => df.filter(col(kc).isNull || !inSet(col(kc), keys))
-      case None =>
-        df.join(keyFrame(spark, tableDir, ds, kc, Some(dt)), Seq(kc),
-          "left_anti")
+  /** `raw` (carrying `__seq`, `__rel` and, with positional deletes,
+    * `__ri`) without the rows equality deletes `dels` and positional
+    * deletes `pds` reach: [[readFileGroups]]' one delete filter, then
+    * one sequence-conditioned anti-join per set too large to hold. */
+  private def withoutDeletes(spark: SparkSession, tableDir: String,
+      raw: DataFrame, dels: Seq[DeleteRef], pds: Seq[PosDeleteRef])
+      : DataFrame = {
+    def reaches(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      Left(GraftSqlBridge.toColumn(e) >= col("__seq"))
+    def expr(c: String) = GraftSqlBridge.toExpression(col(c))
+    // per set: its literal filter, or its anti-join (condition, side)
+    val keySets = dels.groupBy(_.keyCol).toSeq.map { case (kc, ds) =>
+      val dt = raw.schema.fields.find(_.name.equalsIgnoreCase(kc))
+        .map(_.dataType).getOrElse(throw new IllegalStateException(
+          s"delete key column $kc is not in the table at $tableDir"))
+      (if (probeCanonicalType(dt)) keySeqs(spark, tableDir, ds, dt)
+       else None) match {
+        case Some(m) => reaches(KeyDeleteSeq(expr(kc), m))
+        case None => Right((col(kc) === col("__dk"),
+          keyFrame(spark, tableDir, ds, kc, Some(dt))
+            .withColumnRenamed(kc, "__dk")))
+      }
     }
+    val posSets = if (pds.isEmpty) Nil else Seq(
+      positionSeqs(spark, tableDir, pds) match {
+        case Some(m) => reaches(PositionDeleteSeq(expr("__rel"),
+          expr("__ri"), m))
+        case None => Right((col("__rel") === col("__drel") &&
+            col("__ri") === col("__dri"),
+          pds.map(d => sidecarScan(spark,
+              sidecar(spark, tableDir, d.name, d.rows, Some(PosSchema)))
+              .withColumn("__dseq", lit(d.seq)))
+            .reduce(_.unionByName(_)).groupBy(col("__rel"), col("__ri"))
+            .agg(max(col("__dseq")).as("__dseq"))
+            .select(col("__rel").as("__drel"), col("__ri").as("__dri"),
+              col("__dseq"))))
+      })
+    val sets = keySets ++ posSets
+    val gone = sets.collect { case Left(c) => c }.reduceOption(_ || _)
+    sets.collect { case Right(j) => j }
+      .foldLeft(gone.fold(raw)(g => raw.filter(!g))) {
+        case (df, (on, side)) =>
+          df.join(side, on && col("__seq") <= col("__dseq"), "left_anti")
+      }
   }
-
-  /** `df` (carrying `__rel`, `__ri`) without the positions `ds` name;
-    * `positions` is [[literalPositions]] of `ds`. */
-  private def withoutPositions(spark: SparkSession, tableDir: String,
-      df: DataFrame, ds: Seq[PosDeleteRef],
-      positions: Option[(Set[String], Set[Any])]): DataFrame =
-    if (ds.isEmpty) df
-    else positions match {
-      case Some((rels, keys)) =>
-        df.filter(!(inSet(col("__rel"), rels.map(UTF8String.fromString)) &&
-          inSet(concat(col("__rel"), lit("#"), col("__ri").cast("string")),
-            keys)))
-      case None =>
-        df.join(posFrame(spark, tableDir, ds), Seq("__rel", "__ri"),
-          "left_anti")
-    }
 
   // ------------------------------------------------------------------
   // Named refs (branch/tag model) + write-audit-publish
@@ -3033,17 +3033,25 @@ object SnapshotTable {
 
   /** The distinct non-null values of `keys`' column `key` as Catalyst
     * values with their type, or None for more than [[LiteralDeleteRows]]
-    * of them — the literal key set every key probe takes. */
+    * of them — the literal key set every key probe takes. A key frame
+    * whose plan is a local relation is read on the driver, job-free. */
   private def probeKeys(keys: DataFrame, key: String)
       : Option[(Set[Any], DataType)] = {
-    val q = keys.select(col(key)).filter(col(key).isNotNull).distinct()
-    val dt = q.schema.head.dataType
-    val toCatalyst =
-      org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(dt)
-    val rows = q.limit(LiteralDeleteRows.toInt + 1).collect()
-    if (rows.length > LiteralDeleteRows) None
-    else Some((rows.map(r => toCatalyst(r.get(0))).toSet, dt))
+    val one = keys.select(col(key))
+    val dt = one.schema.head.dataType
+    val ks: Set[Any] = one.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.iterator.filterNot(_.isNullAt(0)).map(_.copy().get(0, dt))
+          .toSet
+      case _ =>
+        val toCatalyst =
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToCatalystConverter(dt)
+        one.filter(col(key).isNotNull).distinct()
+          .limit(LiteralDeleteRows.toInt + 1).collect()
+          .map(r => toCatalyst(r.get(0))).toSet
+    }
+    if (ks.size > LiteralDeleteRows) None else Some((ks, dt))
   }
 
   /** A literal key set as a local one-column frame for the Bloom step
@@ -3100,12 +3108,12 @@ object SnapshotTable {
     }
 
   /** [[keyCandidates]] for the keys of equality sidecars `ds`, read on
-    * the driver as literals ([[literalKeys]]). */
+    * the driver as literals ([[keySeqs]]). */
   private def refCandidates(spark: SparkSession, tableDir: String,
       root: Root, ds: Seq[DeleteRef], key: String,
       bloom: Boolean = true): Seq[String] =
     keyCandidates(spark, tableDir, root, rootType(root, key).flatMap(dt =>
-      literalKeys(spark, tableDir, ds, dt).map(_ -> dt)), key, bloom)
+      keySeqs(spark, tableDir, ds, dt).map(_.keySet -> dt)), key, bloom)
 
   /** Whether a file whose zone of a column is `zone` may hold one of
     * `keys` (Catalyst values of `dt`). Each key is rendered into the
@@ -3222,17 +3230,10 @@ object SnapshotTable {
       if (newFiles.isEmpty)
         markers.limit(0)
       else {
-        val base = scanFiles(spark, tableDir, newFiles, None)
-        val qual = fsOf(spark, new Path(tableDir))
-          .makeQualified(new Path(tableDir)).toString
-        val pat = "^(" + Seq(qual + "/",
-            qual.replaceFirst("^file:/", "file:///") + "/")
-          .distinct.map(java.util.regex.Pattern.quote).mkString("|") + ")"
         val pairs = array(columns.map(c =>
           struct(lit(c).as("c"), col(c).cast("string").as("v"))): _*)
-        base.select(
-            regexp_replace(col("_metadata.file_path"), pat, "").as("__f"),
-            explode(pairs).as("__p"))
+        scanFiles(spark, tableDir, newFiles, None)
+          .select(col("__rel").as("__f"), explode(pairs).as("__p"))
           .select(col("__f"), col("__p.c").as("__c"), col("__p.v").as("__v"))
           .filter(col("__v").isNotNull)
           .select(col("__c"), col("__f"), col("__v"),
@@ -3360,14 +3361,25 @@ object SnapshotTable {
     val dirs = bm.names.map(n => new Path(snapDir(tableDir), n))
     if (!dirs.forall(d => fsOf(spark, d).exists(d)))
       return cands // vacuumed: degrade
-    val candsDf = broadcast(cands.toDF("__f"))
     val side = bm.names.map(bloomScan(spark, tableDir, _))
-      .reduce(_.unionByName(_))
-      .filter(col("__c") === key).join(candsDf, Seq("__f"))
-    val covered = side.filter(col("__wi") === -1).select(col("__f"))
-      .distinct().collect().map(_.getString(0)).toSet
-    if (covered.isEmpty) return cands
+      .reduce(_.unionByName(_)).filter(col("__c") === key)
+    // per indexed file: covered (a marker row), has word rows. Word rows
+    // of a file the index does not cover mean it names files by another
+    // path (as indexes over a table path needing URI escapes once did):
+    // then a covered file without word rows may hold keys, so only
+    // covered files with word rows are probed; otherwise a covered file
+    // without any holds only nulls and is pruned
+    val perFile = side.groupBy(col("__f"))
+      .agg(max(col("__wi") === -1), max(col("__wi") >= 0)).collect()
+      .map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
+    val misnamed = perFile.exists { case (_, cov, words) => words && !cov }
+    val candSet = cands.toSet
+    val probed = perFile.collect {
+      case (f, true, words) if candSet(f) && (words || !misnamed) => f
+    }.toSet
+    if (probed.isEmpty) return cands
     val words = side.filter(col("__wi") >= 0)
+      .join(broadcast(probed.toSeq.toDF("__f")), Seq("__f"))
     val seeds = array((0 until bm.k).map(lit): _*)
     val probes = keys.select(col(key).cast("string").as("__v"))
       .filter(col("__v").isNotNull).distinct()
@@ -3383,7 +3395,7 @@ object SnapshotTable {
       .agg(countDistinct(col("__s")).as("__n"))
       .filter(col("__n") === bm.k)
       .select(col("__f")).distinct().collect().map(_.getString(0)).toSeq
-    hits ++ cands.filterNot(covered.contains)
+    hits ++ cands.filterNot(probed.contains)
   }
 
   /** [[keyCandidates]] for a key frame. */
@@ -3410,7 +3422,7 @@ object SnapshotTable {
     val live = resolveFiles(spark, tableDir, root)
     val keySet = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct()
-    val cands = keyCandidates(spark, tableDir, root, probeKeys(keySet, key),
+    val cands = keyCandidates(spark, tableDir, root, probeKeys(keys, key),
       key)
     val df =
       if (cands.isEmpty) read(spark, tableDir, Some(v)).limit(0)
@@ -3448,12 +3460,12 @@ object SnapshotTable {
     * input_file_name(), which Spark rejects once a live merge-on-read
     * delete puts a join between the scan and the projection. */
   private def filesHoldingKeys(spark: SparkSession, tableDir: String,
-      root: Root, keySet: DataFrame, key: String): Seq[String] = {
-    val cands = keyCandidates(spark, tableDir, root, probeKeys(keySet, key),
+      root: Root, keys: DataFrame, key: String): Seq[String] = {
+    val cands = keyCandidates(spark, tableDir, root, probeKeys(keys, key),
       key)
     if (cands.isEmpty) return Nil
     readFileGroups(spark, tableDir, root, cands, keepPos = true)
-      .join(keySet, Seq(key), "leftsemi")
+      .join(keys.select(col(key)), Seq(key), "leftsemi")
       .select(col("__rel")).distinct().collect().map(_.getString(0)).toSeq
   }
 
@@ -3467,14 +3479,13 @@ object SnapshotTable {
       .select(col("service_year"), col("service_month")).distinct()
       .collect())
     if (targets.isEmpty) return Nil
-    val updKeys = updates.select(col(key)).distinct()
     val root = readRoot(spark, tableDir, v)
     // FILE-granular copy-on-write: only the files that verifiably hold
     // an update key are rewritten; untouched same-partition files carry
     // by reference (zone false positives drop out here, before any
     // rewrite — at 100 TB a one-claim correction rewrites one file's
     // worth of data, never its whole month)
-    val rewriteFiles = filesHoldingKeys(spark, tableDir, root, updKeys, key)
+    val rewriteFiles = filesHoldingKeys(spark, tableDir, root, updates, key)
     val verified = rewriteFiles.flatMap(partitionOf).distinct
     val parts = (targets ++ verified).distinct
     val merged =
@@ -3519,7 +3530,7 @@ object SnapshotTable {
     val root = readRoot(spark, tableDir, v)
     // FILE-granular: only files verifiably holding a doomed key are
     // rewritten; same-partition siblings carry by reference
-    val rewriteFiles = filesHoldingKeys(spark, tableDir, root, keySet, key)
+    val rewriteFiles = filesHoldingKeys(spark, tableDir, root, keys, key)
     if (rewriteFiles.isEmpty) return Nil
     val verified = rewriteFiles.flatMap(partitionOf).distinct
     val kept = readFileGroups(spark, tableDir, root, rewriteFiles)
@@ -3563,7 +3574,7 @@ object SnapshotTable {
       .filter(col(key).isNotNull) // NULL never equality-matches a row
     // metadata-only probe: no candidate file can hold any key → no-op
     if (keyCandidates(spark, tableDir, readRoot(spark, tableDir, v),
-        probeKeys(keySet, key), key).isEmpty)
+        probeKeys(keys, key), key).isEmpty)
       return None
     val name = s"deletes/del_${java.util.UUID.randomUUID()}"
     val delDir = s"$tableDir/_snapshots/$name"
@@ -3592,9 +3603,9 @@ object SnapshotTable {
     * partition- and zone-PRUNED by the optional `parts`/`zones` hints,
     * which must be implied by the predicate (the [[planScan]] contract)
     * — locates the matches' (table-relative path, in-file row index)
-    * positions (parquet's `_metadata` columns), the positions commit as
-    * a DV-shaped sidecar, and the read funnel
-    * anti-joins them per reachable file group. Sequence-scoped and
+    * positions (the scan's per-file path and parquet's row index), the
+    * positions commit as a DV-shaped sidecar, and the read funnel's one
+    * delete filter drops them ([[readFileGroups]]). Sequence-scoped and
     * compaction-folded exactly like [[deleteKeysMor]]; positions refer
     * to immutable file content, so they stay valid until their file
     * leaves the live set, after which the ref auto-drops. Rows
@@ -3637,15 +3648,8 @@ object SnapshotTable {
       .filter(predicate)
       .select(col("__rel"), col("__ri")).distinct()
     matched.hint("rebalance").write.mode("overwrite").parquet(delDir)
-    // One read of the WRITTEN sidecar yields everything the commit
-    // needs: the position count, the addressed files, and the
-    // path-shape validation. (Before round 17 the validation probed the
-    // UNWRITTEN `matched` frame with a filter+limit(1) collect — for a
-    // predicate with no `file:` hit, i.e. always, that executed the
-    // whole pruned-scan+predicate+distinct subtree once and the write
-    // re-ran it, doubling deleteWhere's heavy phase; two further
-    // re-reads of the sidecar collected count and distinct refs. One
-    // small aggregation over the sidecar replaces all three jobs.)
+    // One small aggregation over the WRITTEN sidecar yields everything
+    // the commit needs: the position count and the addressed files.
     val perFile = sidecarScan(spark,
         Sidecar(sidecarFiles(spark, tableDir, name), PosSchema, None))
       .groupBy(col("__rel")).agg(count(lit(1)).as("__n")).collect()
@@ -3655,14 +3659,8 @@ object SnapshotTable {
       return None
     }
     // the files the positions address — metadata-sized (≤ files matched)
+    // and named by the manifest's own paths (the scan's `__rel`)
     val refFiles = perFile.iterator.map(_.getString(0)).toSet
-    // positions must be table-relative — an unstripped URI means the
-    // read-side anti-join could never match, silently un-deleting
-    refFiles.find(_.startsWith("file:")).foreach { bad =>
-      fsOf(spark, new Path(delDir)).delete(new Path(delDir), true)
-      throw new IllegalStateException(
-        s"deleteWhere: unstripped file path $bad")
-    }
     beforeCommit()
     try {
       commitGated(spark, tableDir, "delete-where",
@@ -4246,8 +4244,7 @@ object SnapshotTable {
           // one scan of every candidate; each row is tagged with every
           // ref whose keys hold its key, and the sequence rule drops the
           // refs that cannot reach the row's file on the driver below
-          val raw = readFileGroupsRaw(spark, tableDir, root, cands,
-            withPos = true)
+          val raw = readFileGroupsRaw(spark, tableDir, root, cands)
           val dt = raw.schema.fields.find(_.name.equalsIgnoreCase(kc))
             .map(_.dataType).getOrElse(StringType)
           val (small, big) = ds.partition(_.rows <= LiteralDeleteRows)
@@ -4255,7 +4252,7 @@ object SnapshotTable {
             if (small.isEmpty) Nil
             else Seq(raw.select(col("__rel"), array_compact(array(
                 small.map(d => when(inSet(col(kc),
-                    literalKeys(spark, tableDir, Seq(d), dt).get),
+                    keySeqs(spark, tableDir, Seq(d), dt).get.keySet),
                   lit(d.name))): _*)).as("__refs"))
               .filter(size(col("__refs")) > 0))
           bySet ++ big.map(d => raw
@@ -4378,8 +4375,8 @@ object SnapshotTable {
 
   /** Fold the live POSITIONAL-delete sidecars into ONE (round-14
     * VERDICT #7): every deleteWhere commit adds a sidecar, and reads
-    * union+distinct all of them per file group — after k purges that's
-    * k parquet opens per read until a data compaction folds them. The
+    * load every one of them — after k purges that's k sidecars to read
+    * until a data compaction folds them. The
     * union is computed once here, positions addressing files no longer
     * live drop out (they can never match again), and one consolidated
     * ref replaces the consumed ones at seq = max(consumed seqs) —

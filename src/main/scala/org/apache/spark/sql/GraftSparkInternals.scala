@@ -4,8 +4,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileIndexOptions, GraftPartitions, HadoopFsRelation, PartitionDirectory,
+  PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
@@ -36,7 +39,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * Snapshot-table reads ([[parquetScan]]) are planned over the
   * manifest's own file statuses, the way Delta's log-backed file index
-  * does, instead of letting `spark.read.parquet` list every file again. */
+  * does, instead of letting `spark.read.parquet` list every file again,
+  * and carry per-file constant columns next to the partition values. */
 object GraftSparkInternals { // public: graft.sources and operators call it
 
   private def cloned(spark: SparkSession, vectorized: Boolean)
@@ -162,45 +166,91 @@ object GraftSparkInternals { // public: graft.sources and operators call it
   }
 
   /** A parquet scan of exactly `statuses` as a DataFrame, planned with
-    * no listing and no Spark job: the statuses reach Spark's own
-    * [[InMemoryFileIndex]] through a pre-filled [[FileStatusCache]], so
-    * the index finds every root path already "listed". The relation is
-    * the one `spark.read.options(options).option("basePath", basePath)
-    * .schema(schema).parquet(paths: _*)` resolves to — a LogicalRelation
-    * over that index, partition columns inferred from the paths under
+    * no listing and no Spark job, over a [[ManifestFileIndex]]. The
+    * relation is the one `spark.read.options(options).option("basePath",
+    * basePath).schema(schema).parquet(paths: _*)` resolves to — a
+    * LogicalRelation, partition columns parsed from the paths under
     * `basePath` (typed by `schema` where it names them), data schema =
     * `schema` minus those columns — so partition pruning, `inputFiles`
-    * and the `_metadata` columns behave as on a listed read. With no
-    * `schema` the data schema is inferred from the same statuses'
-    * footers. */
+    * and the `_metadata` columns behave as on a listed read. After the
+    * partition columns come the `constants` columns: file i's values are
+    * `values(i)` (Catalyst form), appended to each of its rows the way
+    * partition values are. With no `schema` the data schema is inferred
+    * from the same statuses' footers. */
   def parquetScan(spark: SparkSession, basePath: String,
       statuses: Seq[FileStatus], schema: Option[StructType],
-      options: Map[String, String]): DataFrame = {
+      options: Map[String, String], constants: StructType = new StructType(),
+      values: Seq[InternalRow] = Nil): DataFrame = {
     val session =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val byPath = statuses.map(s => s.getPath -> Array(s)).toMap
-    // the manifest's files are immutable: nothing to re-list or evict
-    val listed = new FileStatusCache {
-      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
-        byPath.get(path)
-      override def putLeafFiles(path: Path, files: Array[FileStatus])
-          : Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
+    val conf = session.sessionState.conf
     val opts = CaseInsensitiveMap(options + ("basePath" -> basePath))
-    val index = new InMemoryFileIndex(session, statuses.map(_.getPath),
-      opts, schema, listed)
-    val partitionSchema = index.partitionSchema
+    val base = new Path(basePath)
+    val qualifiedBase = base.getFileSystem(
+      session.sparkContext.hadoopConfiguration).makeQualified(base)
+    val dirs = statuses.map(_.getPath.getParent).distinct
+    val spec = GraftPartitions.parse(dirs, qualifiedBase, schema,
+      opts.getOrElse(FileIndexOptions.TIME_ZONE, conf.sessionLocalTimeZone),
+      conf)
+    val partOf = spec.partitions.map(p => p.path -> p.values).toMap
+    val extras =
+      if (values.isEmpty) statuses.map(_ => InternalRow.empty) else values
+    val fileValues = statuses.zip(extras).map { case (st, extra) =>
+      val part =
+        if (spec.partitionColumns.isEmpty) InternalRow.empty
+        else partOf.getOrElse(st.getPath.getParent,
+          throw new IllegalStateException(
+            s"${st.getPath} is outside the partition layout under $basePath"))
+      InternalRow.fromSeq(part.toSeq(spec.partitionColumns) ++
+        extra.toSeq(constants))
+    }
+    val index = new ManifestFileIndex(statuses, fileValues,
+      StructType(spec.partitionColumns ++ constants))
     val format = new ParquetFileFormat()
     val fileSchema = schema
       .orElse(format.inferSchema(session, opts, statuses))
       .getOrElse(throw new IllegalArgumentException(
         s"no parquet schema in the ${statuses.size} files under $basePath"))
-    val resolver = session.sessionState.conf.resolver
+    val resolver = conf.resolver
     val dataSchema = StructType(fileSchema.filterNot(f =>
-      partitionSchema.exists(p => resolver(p.name, f.name))))
+      index.partitionSchema.exists(p => resolver(p.name, f.name))))
     session.baseRelationToDataFrame(HadoopFsRelation(index,
-      partitionSchema, dataSchema.asNullable, None, format, opts)(session))
+      index.partitionSchema, dataSchema.asNullable, None, format,
+      opts)(session))
+  }
+
+  /** A [[FileIndex]] over a fixed file set, the way Delta's log-backed
+    * index serves the log's files: the statuses the caller gathered,
+    * each in its own directory entry carrying its partition and
+    * constant values (`values(i)` for file i, in `partitionSchema`
+    * order). Nothing is listed, re-stat'ed or cached; partition filters
+    * prune by those values as Spark's own indexes do. */
+  private final class ManifestFileIndex(files: Seq[FileStatus],
+      values: Seq[InternalRow], override val partitionSchema: StructType)
+      extends FileIndex {
+    override def rootPaths: Seq[Path] = files.map(_.getPath)
+    override def inputFiles: Array[String] =
+      files.map(_.getPath.toUri.toString).toArray
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def refresh(): Unit = ()
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val dirs = files.zip(values).collect {
+        case (st, v) if st.getLen > 0 => PartitionDirectory(v, Array(st))
+      }
+      val names = partitionSchema.fieldNames.toSet
+      val pruning = partitionFilters.filter(_.references.forall(a =>
+        names.contains(a.name)))
+      if (pruning.isEmpty) dirs
+      else {
+        val keep = Predicate.createInterpreted(pruning.reduce(And).transform {
+          case a: AttributeReference =>
+            val i = partitionSchema.fieldNames.indexOf(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        dirs.filter(d => keep.eval(d.values))
+      }
+    }
   }
 
   def partitionedFile(partitionValues: InternalRow, absolutePath: String,

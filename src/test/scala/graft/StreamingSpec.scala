@@ -349,7 +349,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      try q.awaitTermination(120000) finally q.stop()
       spark.read.parquet(sink).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     }
